@@ -9,6 +9,8 @@ results agree to the ULP.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -50,8 +52,15 @@ def cosine(a: Column, b: Column) -> Column:
 def dlit(x: float) -> str:
     """Exact double literal: repr() is the shortest round-tripping
     decimal, and Spark's parser reads it with correctly-rounded
-    Double.parseDouble — bit-identical to F.lit(x)."""
-    return repr(float(x)) + "D"
+    Double.parseDouble — bit-identical to F.lit(x). NaN and ±Inf have
+    no literal syntax (repr gives ``nan``/``inf``), so they render as
+    the string casts Spark folds to the same doubles."""
+    x = float(x)
+    if math.isnan(x):
+        return "CAST('NaN' AS DOUBLE)"
+    if math.isinf(x):
+        return f"CAST('{'-' if x < 0 else ''}Infinity' AS DOUBLE)"
+    return repr(x) + "D"
 
 
 def darr(xs) -> str:

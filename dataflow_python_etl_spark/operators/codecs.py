@@ -938,12 +938,12 @@ _GIF_MAGICS = (b"GIF87a", b"GIF89a")
 
 
 @lru_cache(maxsize=None)
-def _lzw_base(clear: int) -> list[bytes]:
-    """The initial LZW table for a given CLEAR code — immutable bytes
-    entries, so one shared instance per code size serves every decode
-    (rebuilding 256 bytes objects per frame measured ~20% of small-
-    frame decode time). Callers copy with ``list(base)``."""
-    return [bytes([i]) for i in range(clear)] + [b"", b""]
+def _lzw_base(clear: int) -> tuple[bytes, ...]:
+    """The initial LZW table for a given CLEAR code — one shared,
+    immutable (tuple of bytes) instance per code size serves every
+    decode (rebuilding 256 bytes objects per frame measured ~20% of
+    small-frame decode time). Callers copy with ``list(base)``."""
+    return tuple(bytes([i]) for i in range(clear)) + (b"", b"")
 
 
 def _gif_lzw_decode(min_code_size: int, data: bytes, expected: int) -> bytes:

@@ -16,6 +16,8 @@ Scale notes: state for the windowed agg is bounded by the watermark
 
 from __future__ import annotations
 
+from typing import Callable, NamedTuple
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -329,6 +331,166 @@ def _guard_replay(
     return batch.join(corpus, id_col, "left_anti")
 
 
+def _ingest_single_row(
+    stream_df: DataFrame,
+    kind: str,
+    corpus_path: str,
+    checkpoint: str,
+    id_col: str,
+    payload_col: str,
+    replay_guard: str,
+    index_exists,
+    rebuild_index,
+    probe,
+    gate=None,
+) -> "pyspark.sql.streaming.StreamingQuery":  # noqa: F821
+    """The one crash-safe skeleton behind every single-row near-dup
+    ingest sink (text, image/audio phash, video/audio/text set
+    fingerprints). Per micro-batch: refuse a restart whose corpus
+    vanished, no-op a fully committed replay, ``gate`` the batch,
+    drop already-ingested ids (:func:`_guard_replay`), rebuild a lost
+    index FROM the corpus and persist it before use, ``probe``, drop
+    the new side of every pair, then commit index → corpus →
+    watermark. A modality supplies only what differs:
+
+    - ``index_exists(spark) -> bool`` and ``rebuild_index(spark,
+      corpus)`` (the full-corpus rebuild, written before it is read —
+      a partial index would silently blind every later batch to every
+      pre-loss corpus item: the poisoned-index failure mode);
+    - ``probe(spark, batch, corpus) -> (pairs, append_index)``:
+      ``pairs`` carries ``(doc_a, doc_b)`` with doc_a < doc_b, every
+      pair touching the batch (``corpus`` is None before the first
+      commit: batch-only pairs); ``append_index(survivors)`` appends
+      the survivors' index rows;
+    - ``gate(batch) -> batch``: deterministic pre-probe filters.
+
+    Decision rule: a batch item is dropped iff it pairs with anything
+    already decided — an ingested item (either side of the pair; the
+    corpus is immutable, so a lower-id newcomer still drops) or a
+    lower-id item of its own batch (``doc_b`` of a new-new pair).
+
+    Restart guard: a missing corpus at ``batch_id > 0`` with an index
+    or watermark left behind FAILS loudly — batch_id alone is not
+    evidence of prior ingestion (an empty batch 0 writes nothing),
+    but the index is appended BEFORE the corpus, so any ingest leaves
+    one of the two artifacts; silently rebuilding the corpus from one
+    batch would lose every prior survivor and re-admit replayed ids.
+
+    Crash safety (both guards): the index is appended FIRST, then the
+    corpus, then (watermark mode) the watermark. A crash between
+    index and corpus appends re-processes the batch: duplicate index
+    rows only re-propose the same candidate pairs, which every probe
+    absorbs (per-pair aggregation or a match-level ``distinct``), and
+    identity pairs are excluded. A crash between corpus append and
+    watermark write replays the batch against a corpus that already
+    contains it; the replay converges to the identical survivor set
+    and the corpus write is idempotent. ``replay_guard="watermark"``
+    (monotone ids) swaps the corpus-sized anti-join for a pure filter
+    against a tiny atomically-swapped watermark file and writes each
+    batch's corpus rows as a DYNAMIC overwrite of its own
+    ``ingest_batch=<id>`` partition, so a replay rewrites instead of
+    appending; a replay arriving after the watermark committed
+    (batch_id == recorded) is a pure no-op. foreachBatch is
+    AT-LEAST-once: every write here is per-key idempotent or
+    partition-overwritten, never an additive fold. Ids must be unique
+    across the stream's lifetime."""
+    import json
+    import os
+
+    from dataflow_python_etl_spark.operators.dedup import unpersist_all
+
+    if replay_guard not in ("anti_join", "watermark"):
+        raise ValueError(f"replay_guard must be anti_join|watermark, got {replay_guard!r}")
+    wm_path = corpus_path + ".__ingest_watermark"
+
+    def _write_wm(batch_id: int, max_id) -> None:
+        # tmp + atomic rename: a torn watermark would silently re-admit
+        # (or worse, permanently skip) ids on the next restart
+        tmp = wm_path + ".__tmp"
+        with open(tmp, "w") as f:
+            json.dump({"batch_id": batch_id, "max_id": max_id}, f)
+        os.replace(tmp, wm_path)
+
+    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
+        spark = batch_df.sparkSession
+        batch = batch_df.select(id_col, payload_col)
+        if (
+            not os.path.exists(corpus_path)
+            and batch_id > 0
+            and (index_exists(spark) or os.path.exists(wm_path))
+        ):
+            raise RuntimeError(
+                f"{kind} restart at batch {batch_id} but corpus "
+                f"{corpus_path} is missing — refusing to rebuild from a "
+                "single batch; restore the corpus or start a fresh checkpoint."
+            )
+        wm = None
+        if replay_guard == "watermark" and os.path.exists(wm_path):
+            with open(wm_path) as f:
+                wm = json.load(f)
+        if wm is not None and batch_id == wm["batch_id"]:
+            return  # this exact batch fully committed — replay is a no-op
+        if gate is not None:
+            batch = gate(batch)
+        corpus = None
+        if os.path.exists(corpus_path):
+            corpus = spark.read.parquet(corpus_path).select(id_col, payload_col)
+            batch = _guard_replay(batch, corpus, id_col, replay_guard, wm)
+            if not index_exists(spark):
+                rebuild_index(spark, corpus)
+        pairs, append_index = probe(spark, batch, corpus)
+        if corpus is None:
+            removals = pairs.select(F.col("doc_b").alias(id_col)).distinct()
+        else:
+            new_ids = batch.select(F.col(id_col).alias("__nid"))
+            b_new = pairs.join(
+                new_ids, pairs["doc_b"] == F.col("__nid"), "left_semi"
+            ).select(F.col("doc_b").alias(id_col))
+            a_new_b_corpus = (
+                pairs.join(new_ids, pairs["doc_b"] == F.col("__nid"), "left_anti")
+                .join(new_ids, pairs["doc_a"] == F.col("__nid"), "left_semi")
+                .select(F.col("doc_a").alias(id_col))
+            )
+            removals = b_new.union(a_new_b_corpus).distinct()
+        max_ingested = None
+        if replay_guard == "watermark":
+            # highest id this batch DECIDED (survivor or dup — a dropped
+            # dup is a decision too; re-admitting it later would flip it)
+            max_ingested = batch.agg(F.max(id_col)).first()[0]
+            if max_ingested is None:
+                # every id already covered by the watermark (source-level
+                # replay): record completion, touch nothing else. An
+                # empty FIRST batch (wm is None) has no watermark to
+                # carry forward — skip the write rather than invent one.
+                if wm is not None:
+                    _write_wm(batch_id, wm["max_id"])
+                unpersist_all()  # probe caches registered before the filter emptied
+                return
+        # materialize before the appends so both writes see one
+        # consistent survivor set (and the probe caches can be freed)
+        survivors = batch.join(removals, id_col, "left_anti").localCheckpoint(eager=True)
+        append_index(survivors)
+        if replay_guard == "watermark":
+            (
+                survivors.withColumn("ingest_batch", F.lit(batch_id))
+                .write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy("ingest_batch")
+                .parquet(corpus_path)
+            )
+            _write_wm(batch_id, max_ingested)
+        else:
+            survivors.write.mode("append").parquet(corpus_path)
+        unpersist_all()
+
+    return (
+        stream_df.writeStream.foreachBatch(apply_batch)
+        .option("checkpointLocation", checkpoint)
+        .outputMode("append")
+        .start()
+    )
+
+
 def stream_dedup_ingest(
     stream_docs: DataFrame,
     corpus_path: str,
@@ -406,36 +568,29 @@ def stream_dedup_ingest(
     ``curate_corpus(classifier_weights=…)``: batch docs are kept iff
     their hashed-linear ``margin > classifier_min_margin``, gramless
     docs dropped on the same no-evidence rule. All three gates are
-    deterministic, so crash replays re-drop the same docs. Crash safety (both guards): the index is
-    appended FIRST, then the corpus, then (watermark mode) the
-    watermark. A crash between index and corpus appends re-processes
-    the doc — duplicate index rows re-propose the same candidate
-    pair, which is harmless because candidates are aggregated per
-    pair in the posting-list join (``_posting_common``'s pair
-    groupBy) and every downstream consumer reaches the corpus via
-    semi-joins, which are idempotent under duplicate probe rows (no
-    bare ``distinct`` is needed, and since round 4 none exists on
-    this path). A crash between
-    corpus append and watermark write replays the batch against a
-    corpus that already contains it: the verification de-duplicates
-    ids (see ``_verify_jaccard(dedup_ids=True)``), identity pairs are
-    excluded, so the replay converges to the identical survivor set
-    and the partition overwrite is idempotent. Ids must be unique
-    across the stream's lifetime.
+    deterministic, so crash replays re-drop the same docs.
+
+    Crash safety and the restart/replay guards are the shared
+    :func:`_ingest_single_row` contract. Text specifics: duplicate
+    index rows from a crash between index and corpus appends are
+    harmless because candidates are aggregated per pair in the
+    posting-list join (``_posting_common``'s pair groupBy) and every
+    downstream consumer reaches the corpus via semi-joins, which are
+    idempotent under duplicate probe rows (no bare ``distinct`` is
+    needed, and since round 4 none exists on this path); a replay
+    against a corpus that already holds the batch converges because
+    the verification de-duplicates ids (see
+    ``_verify_jaccard(dedup_ids=True)``).
     """
-    import json
     import os
 
     from dataflow_python_etl_spark.operators.dedup import (
         BandIndexStore,
         _band_frame,
+        minhash_lsh_pairs,
         minhash_lsh_pairs_incremental,
         minhash_signatures,
-        unpersist_all,
     )
-
-    if replay_guard not in ("anti_join", "watermark"):
-        raise ValueError(f"replay_guard must be anti_join|watermark, got {replay_guard!r}")
 
     # Streaming decontamination gate: the eval set's distinct gram set
     # is materialized ONCE at stream build (localCheckpoint — a plain
@@ -466,93 +621,12 @@ def stream_dedup_ingest(
     if classifier_weights is not None:
         frozen_clf = classifier_weights.localCheckpoint(eager=True)
 
-    wm_path = corpus_path + ".__ingest_watermark"
-
-    def _read_wm() -> dict | None:
-        if not os.path.exists(wm_path):
-            return None
-        with open(wm_path) as f:
-            return json.load(f)
-
-    def _write_wm(batch_id: int, max_id) -> None:
-        # tmp + atomic rename: a torn watermark would silently re-admit
-        # (or worse, permanently skip) ids on the next restart
-        tmp = wm_path + ".__tmp"
-        with open(tmp, "w") as f:
-            json.dump({"batch_id": batch_id, "max_id": max_id}, f)
-        os.replace(tmp, wm_path)
-
-    def _store(spark: SparkSession) -> BandIndexStore | None:
-        if index_table is None:
-            return None
-        return BandIndexStore(spark, index_table, path=index_path, n_buckets=index_buckets)
-
-    def _index_exists(spark: SparkSession) -> bool:
-        st = _store(spark)
-        return st.exists() if st is not None else os.path.exists(index_path)
-
-    def _index_read(spark: SparkSession) -> DataFrame:
-        st = _store(spark)
-        return st.read() if st is not None else spark.read.parquet(index_path)
-
-    def _index_append(spark: SparkSession, bands: DataFrame) -> None:
-        st = _store(spark)
-        if st is not None:
-            st.append(bands)
-        else:
-            bands.write.mode("append").parquet(index_path)
-
-    def _index_rebuild(spark: SparkSession, bands: DataFrame) -> None:
-        st = _store(spark)
-        if st is not None:
-            st.drop()  # clear a stale catalog row / partial dir first
-            st.append(bands)
-        else:
-            bands.write.parquet(index_path)
-
-    def _corpus_append(survivors: DataFrame, batch_id: int) -> None:
-        if replay_guard == "watermark":
-            (
-                survivors.withColumn("ingest_batch", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("ingest_batch")
-                .parquet(corpus_path)
-            )
-        else:
-            survivors.write.mode("append").parquet(corpus_path)
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        batch = batch_df.select(id_col, text_col)
-        if (
-            not os.path.exists(corpus_path)
-            and batch_id > 0
-            and (_index_exists(spark) or os.path.exists(wm_path))
-        ):
-            # same failure class as _guard_missing_table: a restarted
-            # sink whose corpus vanished must not silently rebuild the
-            # corpus from one batch (every prior survivor would be
-            # lost AND replayed ids would re-enter as "new").
-            # batch_id alone is NOT evidence of prior ingestion — an
-            # empty batch 0 writes nothing — so require a ingest
-            # artifact (index or watermark; the index is appended
-            # BEFORE the corpus, so any ingest leaves one).
-            raise RuntimeError(
-                f"stream_dedup_ingest restart at batch {batch_id} but corpus "
-                f"{corpus_path} is missing — refusing to rebuild from a "
-                "single batch; restore the corpus or start a fresh checkpoint."
-            )
-        wm = _read_wm() if replay_guard == "watermark" else None
-        if wm is not None and batch_id == wm["batch_id"]:
-            return  # this exact batch fully committed — replay is a no-op
+    def gate(batch: DataFrame) -> DataFrame:
         if eval_grams is not None:
             # same candidate shape as dedup.contamination_check, minus
             # the size scan (min_overlap thresholds the raw hit count):
             # a contaminated doc is dropped BEFORE signing, so it never
-            # enters the index or corpus — deterministic, so crash
-            # replays re-drop it and the convergence argument above is
-            # untouched
+            # enters the index or corpus
             from dataflow_python_etl_spark.operators.dedup import _doc_shingles
 
             hits = (
@@ -568,8 +642,7 @@ def stream_dedup_ingest(
             # online DSIR target-likeness gate: semi-join on the ids
             # whose frozen-weight score clears the threshold — docs
             # with no tokens have no score row and are dropped (a
-            # quality gate requires evidence). Deterministic, so
-            # crash replays re-drop the same docs.
+            # quality gate requires evidence)
             from dataflow_python_etl_spark.operators.lm import dsir_score_with
 
             passing = dsir_score_with(
@@ -587,7 +660,6 @@ def stream_dedup_ingest(
             # weights (classifier.quality_classifier_fit), keep iff
             # margin > classifier_min_margin. Gramless docs have no
             # score row and are dropped (no evidence, no ingest).
-            # Deterministic — crash replays re-drop the same docs.
             from dataflow_python_etl_spark.operators.classifier import (
                 quality_classifier_score_with,
             )
@@ -600,85 +672,58 @@ def stream_dedup_ingest(
                 buckets=classifier_buckets,
             ).where(F.col("margin") > classifier_min_margin)
             batch = batch.join(keep_clf.select(id_col), id_col, "left_semi")
-        if os.path.exists(corpus_path):
-            corpus = spark.read.parquet(corpus_path).select(id_col, text_col)
-            batch = _guard_replay(batch, corpus, id_col, replay_guard, wm)
-            if not _index_exists(spark):
-                # rebuild the FULL corpus index and PERSIST it before
-                # use: an in-plan rebuild used once and not written
-                # would leave the index holding only this batch's
-                # bands, silently blinding every later batch to every
-                # pre-loss corpus doc (poisoned-index failure mode)
-                _index_rebuild(
-                    spark,
-                    _band_frame(
-                        minhash_signatures(corpus, id_col, text_col, n, num_perm),
-                        id_col,
-                        num_perm,
-                        rows_per_band,
-                    ),
-                )
-            index = _index_read(spark)
-            pairs = minhash_lsh_pairs_incremental(
-                corpus, batch, index, id_col, text_col, n, num_perm, rows_per_band, threshold
-            )
-            # a new doc is removed when it pairs with ANYTHING already
-            # decided: a corpus doc (either side of the pair — the
-            # corpus is immutable) or a lower-id doc of its own batch
-            # (doc_b of a new-new pair). Corpus-side pair members are
-            # never removed.
-            new_ids = batch.select(F.col(id_col).alias("__nid"))
-            b_new = pairs.join(
-                new_ids, pairs["doc_b"] == F.col("__nid"), "left_semi"
-            ).select(F.col("doc_b").alias(id_col))
-            a_new_b_corpus = (
-                pairs.join(new_ids, pairs["doc_b"] == F.col("__nid"), "left_anti")
-                .join(new_ids, pairs["doc_a"] == F.col("__nid"), "left_semi")
-                .select(F.col("doc_a").alias(id_col))
-            )
-            removals = b_new.union(a_new_b_corpus).distinct()
-        else:
-            corpus = None
-            from dataflow_python_etl_spark.operators.dedup import minhash_lsh_pairs
+        return batch
 
-            pairs = minhash_lsh_pairs(
-                batch, id_col, text_col, n, num_perm, rows_per_band, threshold
-            )
-            removals = pairs.select(F.col("doc_b").alias(id_col)).distinct()
-        max_ingested = None
-        if replay_guard == "watermark":
-            # highest id this batch DECIDED (survivor or dup — a dropped
-            # dup is a decision too; re-admitting it later would flip it)
-            max_ingested = batch.agg(F.max(id_col)).first()[0]
-            if max_ingested is None:
-                # every id already covered by the watermark (source-level
-                # replay): record completion, touch nothing else. An
-                # empty FIRST batch (wm is None) has no watermark to
-                # carry forward — skip the write rather than invent one.
-                if wm is not None:
-                    _write_wm(batch_id, wm["max_id"])
-                unpersist_all()  # LSH caches registered before the filter emptied
-                return
-        # materialize before the appends so both writes see one
-        # consistent survivor set (and the LSH caches can be freed)
-        survivors = batch.join(removals, id_col, "left_anti").localCheckpoint(eager=True)
-        bands = _band_frame(
-            minhash_signatures(survivors, id_col, text_col, n, num_perm),
+    def _store(spark: SparkSession) -> BandIndexStore | None:
+        if index_table is None:
+            return None
+        return BandIndexStore(spark, index_table, path=index_path, n_buckets=index_buckets)
+
+    def _bands(docs: DataFrame) -> DataFrame:
+        return _band_frame(
+            minhash_signatures(docs, id_col, text_col, n, num_perm),
             id_col,
             num_perm,
             rows_per_band,
         )
-        _index_append(spark, bands)
-        _corpus_append(survivors, batch_id)
-        if replay_guard == "watermark":
-            _write_wm(batch_id, max_ingested)
-        unpersist_all()
 
-    return (
-        stream_docs.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .start()
+    def index_exists(spark: SparkSession) -> bool:
+        st = _store(spark)
+        return st.exists() if st is not None else os.path.exists(index_path)
+
+    def rebuild_index(spark: SparkSession, corpus: DataFrame) -> None:
+        bands = _bands(corpus)
+        st = _store(spark)
+        if st is not None:
+            st.drop()  # clear a stale catalog row / partial dir first
+            st.append(bands)
+        else:
+            bands.write.parquet(index_path)
+
+    def probe(spark: SparkSession, batch: DataFrame, corpus: DataFrame | None):
+        def append_index(survivors: DataFrame) -> None:
+            bands = _bands(survivors)
+            st = _store(spark)
+            if st is not None:
+                st.append(bands)
+            else:
+                bands.write.mode("append").parquet(index_path)
+
+        if corpus is None:
+            pairs = minhash_lsh_pairs(
+                batch, id_col, text_col, n, num_perm, rows_per_band, threshold
+            )
+            return pairs, append_index
+        st = _store(spark)
+        index = st.read() if st is not None else spark.read.parquet(index_path)
+        pairs = minhash_lsh_pairs_incremental(
+            corpus, batch, index, id_col, text_col, n, num_perm, rows_per_band, threshold
+        )
+        return pairs, append_index
+
+    return _ingest_single_row(
+        stream_docs, "stream_dedup_ingest", corpus_path, checkpoint, id_col, text_col,
+        replay_guard, index_exists, rebuild_index, probe, gate,
     )
 
 
@@ -712,20 +757,11 @@ def stream_image_dedup_ingest(
     it near-dups any ingested image, or a lower-id image of its own
     batch.
 
-    Crash safety mirrors :func:`stream_dedup_ingest` exactly (same
-    guard functions): a restart whose corpus vanished but whose index/
-    watermark artifacts survive FAILS instead of silently rebuilding
-    from one batch; a lost index is rebuilt FROM the corpus (one
-    re-decode) and persisted before use, never probed partial; the
-    index is appended before the corpus, so a crash between the two
-    re-proposes candidates that the probe's ``distinct`` and the
-    anti-join replay guard absorb; ``replay_guard="watermark"``
-    (monotone ids) replaces the corpus-sized anti-join with a pure
-    filter and makes corpus appends per-batch dynamic partition
-    OVERWRITES, so a replayed batch rewrites its own partition.
-    foreachBatch is AT-LEAST-once: every write here is per-key
-    idempotent or partition-overwritten — never an additive fold
-    (CLAUDE.md round-6 rule).
+    Crash safety, the restart/replay guards and ``replay_guard`` are
+    the shared :func:`_ingest_single_row` contract; a lost index is
+    rebuilt FROM the corpus (one re-decode), and duplicate index rows
+    from a crash between the index and corpus appends are absorbed by
+    the probe's ``distinct``.
 
     ``fingerprint_fn`` swaps the perceptual kernel: any
     ``(df, id_col, payload_col) -> (id, phash)`` fingerprinter — pass
@@ -733,125 +769,41 @@ def stream_image_dedup_ingest(
     sink (the fingerprint frame's first column is renamed to
     ``id_col`` positionally, so the kernels' differing default id
     names don't matter). Default: ``multimodal.image_phash``."""
-    import json
     import os
 
     from dataflow_python_etl_spark.operators.dedup import (
         _persist,
         hamming_banded_pairs_incremental,
-        unpersist_all,
     )
     from dataflow_python_etl_spark.operators.multimodal import image_phash
 
     if fingerprint_fn is None:
         fingerprint_fn = image_phash
 
-    if replay_guard not in ("anti_join", "watermark"):
-        raise ValueError(
-            f"replay_guard must be anti_join|watermark, got {replay_guard!r}"
-        )
+    def fingerprints(items: DataFrame) -> DataFrame:
+        return fingerprint_fn(items, id_col, payload_col).toDF(id_col, "phash")
 
-    wm_path = corpus_path + ".__ingest_watermark"
-
-    def _read_wm() -> dict | None:
-        if not os.path.exists(wm_path):
-            return None
-        with open(wm_path) as f:
-            return json.load(f)
-
-    def _write_wm(batch_id: int, max_id) -> None:
-        tmp = wm_path + ".__tmp"
-        with open(tmp, "w") as f:
-            json.dump({"batch_id": batch_id, "max_id": max_id}, f)
-        os.replace(tmp, wm_path)
-
-    def _corpus_append(survivors: DataFrame, batch_id: int) -> None:
-        if replay_guard == "watermark":
-            (
-                survivors.withColumn("ingest_batch", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("ingest_batch")
-                .parquet(corpus_path)
-            )
-        else:
-            survivors.write.mode("append").parquet(corpus_path)
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        batch = batch_df.select(id_col, payload_col)
-        if (
-            not os.path.exists(corpus_path)
-            and batch_id > 0
-            and (os.path.exists(index_path) or os.path.exists(wm_path))
-        ):
-            raise RuntimeError(
-                f"stream_image_dedup_ingest restart at batch {batch_id} but "
-                f"corpus {corpus_path} is missing — refusing to rebuild from "
-                "a single batch; restore the corpus or start a fresh "
-                "checkpoint."
-            )
-        wm = _read_wm() if replay_guard == "watermark" else None
-        if wm is not None and batch_id == wm["batch_id"]:
-            return  # this exact batch fully committed — replay is a no-op
-        index_sig = None
-        if os.path.exists(corpus_path):
-            corpus = spark.read.parquet(corpus_path)
-            batch = _guard_replay(batch, corpus, id_col, replay_guard, wm)
-            if not os.path.exists(index_path):
-                # rebuild the FULL corpus fingerprint index and PERSIST
-                # it before use — a partial index silently blinds every
-                # later batch (the poisoned-index failure mode)
-                fingerprint_fn(
-                    corpus.select(id_col, payload_col), id_col, payload_col
-                ).toDF(id_col, "phash").write.parquet(index_path)
-            index_sig = spark.read.parquet(index_path)
-        sig = _persist(
-            fingerprint_fn(batch, id_col, payload_col).toDF(id_col, "phash")
-        )
+    def probe(spark: SparkSession, batch: DataFrame, corpus: DataFrame | None):
+        index_sig = None if corpus is None else spark.read.parquet(index_path)
+        sig = _persist(fingerprints(batch))
         pairs = hamming_banded_pairs_incremental(
             index_sig, sig, id_col, "phash", max_hamming, n_bands,
             combine=2 if max_hamming <= n_bands - 2 else 1,
         )
-        # a new image is removed when it pairs with anything already
-        # decided: an ingested image (either side of the pair) or a
-        # lower-id image of its own batch (doc_b of a new-new pair)
-        new_ids = batch.select(F.col(id_col).alias("__nid"))
-        b_new = pairs.join(
-            new_ids, pairs["doc_b"] == F.col("__nid"), "left_semi"
-        ).select(F.col("doc_b").alias(id_col))
-        a_new_b_corpus = (
-            pairs.join(new_ids, pairs["doc_b"] == F.col("__nid"), "left_anti")
-            .join(new_ids, pairs["doc_a"] == F.col("__nid"), "left_semi")
-            .select(F.col("doc_a").alias(id_col))
-        )
-        removals = b_new.union(a_new_b_corpus).distinct()
-        max_ingested = None
-        if replay_guard == "watermark":
-            max_ingested = batch.agg(F.max(id_col)).first()[0]
-            if max_ingested is None:
-                if wm is not None:
-                    _write_wm(batch_id, wm["max_id"])
-                unpersist_all()
-                return
-        survivors = batch.join(removals, id_col, "left_anti").localCheckpoint(
-            eager=True
-        )
-        # index first, then corpus (same ordering argument as the text
-        # sink: an orphan index row only re-proposes a candidate)
-        sig.join(survivors, id_col, "left_semi").write.mode("append").parquet(
-            index_path
-        )
-        _corpus_append(survivors, batch_id)
-        if replay_guard == "watermark":
-            _write_wm(batch_id, max_ingested)
-        unpersist_all()
 
-    return (
-        stream_images.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .start()
+        def append_index(survivors: DataFrame) -> None:
+            sig.join(survivors, id_col, "left_semi").write.mode("append").parquet(
+                index_path
+            )
+
+        return pairs, append_index
+
+    return _ingest_single_row(
+        stream_images, "stream_image_dedup_ingest", corpus_path, checkpoint,
+        id_col, payload_col, replay_guard,
+        lambda spark: os.path.exists(index_path),
+        lambda spark, corpus: fingerprints(corpus).write.parquet(index_path),
+        probe,
     )
 
 
@@ -896,21 +848,16 @@ def stream_video_dedup_ingest(
     streams AUDIO clips with online TRIM filtering — a re-posted cut
     of an already-ingested recording is dropped at ingest.
 
-    Crash safety mirrors the image sink exactly (same guard
-    functions): missing-corpus-with-surviving-artifacts restarts FAIL
-    loudly; a lost index is rebuilt FROM the corpus (one re-decode)
-    and persisted before use; the index is appended before the
-    corpus, so a crash between the two only re-proposes candidates
-    (the probe's match-level distinct absorbs duplicate index rows);
-    ``replay_guard="watermark"`` (monotone ids) replaces the
-    corpus-sized anti-join with a pure filter and makes corpus
-    appends per-batch dynamic partition OVERWRITES. foreachBatch is
-    AT-LEAST-once: every write here is per-key idempotent or
-    partition-overwritten — never an additive fold."""
-    import json
+    Crash safety, the restart/replay guards and ``replay_guard`` are
+    the shared :func:`_ingest_single_row` contract; a lost index is
+    rebuilt FROM the corpus (one re-decode), and duplicate index rows
+    from a crash between the index and corpus appends are absorbed by
+    the probe's match-level ``distinct``."""
     import os
 
-    from dataflow_python_etl_spark.operators.dedup import _persist, unpersist_all
+    from pyspark.sql import Window
+
+    from dataflow_python_etl_spark.operators.dedup import _persist
     from dataflow_python_etl_spark.operators.multimodal import (
         set_fingerprint_pairs_incremental,
         video_frame_hashes,
@@ -918,36 +865,6 @@ def stream_video_dedup_ingest(
 
     if hash_fn is None:
         hash_fn = video_frame_hashes
-    if replay_guard not in ("anti_join", "watermark"):
-        raise ValueError(
-            f"replay_guard must be anti_join|watermark, got {replay_guard!r}"
-        )
-
-    wm_path = corpus_path + ".__ingest_watermark"
-
-    def _read_wm() -> dict | None:
-        if not os.path.exists(wm_path):
-            return None
-        with open(wm_path) as f:
-            return json.load(f)
-
-    def _write_wm(batch_id: int, max_id) -> None:
-        tmp = wm_path + ".__tmp"
-        with open(tmp, "w") as f:
-            json.dump({"batch_id": batch_id, "max_id": max_id}, f)
-        os.replace(tmp, wm_path)
-
-    def _corpus_append(survivors: DataFrame, batch_id: int) -> None:
-        if replay_guard == "watermark":
-            (
-                survivors.withColumn("ingest_batch", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("ingest_batch")
-                .parquet(corpus_path)
-            )
-        else:
-            survivors.write.mode("append").parquet(corpus_path)
 
     def _raw(videos: DataFrame) -> DataFrame:
         # decode ONCE per payload: the (id, hash) fan-out, canonical names
@@ -957,8 +874,6 @@ def stream_video_dedup_ingest(
 
     def _counts(raw: DataFrame) -> DataFrame:
         # (id, set_hash, c, n): multiplicity + total denormalized per row
-        from pyspark.sql import Window
-
         r = raw if multiset else raw.distinct()
         return (
             r.groupBy("sid", "shash")
@@ -967,79 +882,29 @@ def stream_video_dedup_ingest(
             .toDF(id_col, "set_hash", "c", "n")
         )
 
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        batch = batch_df.select(id_col, payload_col)
-        if (
-            not os.path.exists(corpus_path)
-            and batch_id > 0
-            and (os.path.exists(index_path) or os.path.exists(wm_path))
-        ):
-            raise RuntimeError(
-                f"stream_video_dedup_ingest restart at batch {batch_id} but "
-                f"corpus {corpus_path} is missing — refusing to rebuild from "
-                "a single batch; restore the corpus or start a fresh "
-                "checkpoint."
-            )
-        wm = _read_wm() if replay_guard == "watermark" else None
-        if wm is not None and batch_id == wm["batch_id"]:
-            return  # this exact batch fully committed — replay is a no-op
+    def probe(spark: SparkSession, batch: DataFrame, corpus: DataFrame | None):
         index_cnt = None
-        if os.path.exists(corpus_path):
-            corpus = spark.read.parquet(corpus_path)
-            batch = _guard_replay(batch, corpus, id_col, replay_guard, wm)
-            if not os.path.exists(index_path):
-                # rebuild the FULL corpus index and PERSIST it before
-                # use — a partial index silently blinds later batches
-                _counts(_raw(corpus)).write.parquet(index_path)
-            index_cnt = spark.read.parquet(index_path).toDF(
-                "sid", "shash", "c", "n"
-            )
+        if corpus is not None:
+            index_cnt = spark.read.parquet(index_path).toDF("sid", "shash", "c", "n")
         raw = _persist(_raw(batch))
         pairs = set_fingerprint_pairs_incremental(
             index_cnt, raw, metric=metric,
             min_score_ppm=min_score_ppm, multiset=multiset,
         )
-        # a new video drops when it pairs with anything already
-        # decided: an ingested video (either side) or a lower-id
-        # video of its own batch (id_b of a new-new pair)
-        new_ids = batch.select(F.col(id_col).alias("__nid"))
-        b_new = pairs.join(
-            new_ids, pairs["id_b"] == F.col("__nid"), "left_semi"
-        ).select(F.col("id_b").alias(id_col))
-        a_new_b_corpus = (
-            pairs.join(new_ids, pairs["id_b"] == F.col("__nid"), "left_anti")
-            .join(new_ids, pairs["id_a"] == F.col("__nid"), "left_semi")
-            .select(F.col("id_a").alias(id_col))
-        )
-        removals = b_new.union(a_new_b_corpus).distinct()
-        max_ingested = None
-        if replay_guard == "watermark":
-            max_ingested = batch.agg(F.max(id_col)).first()[0]
-            if max_ingested is None:
-                if wm is not None:
-                    _write_wm(batch_id, wm["max_id"])
-                unpersist_all()
-                return
-        survivors = batch.join(removals, id_col, "left_anti").localCheckpoint(
-            eager=True
-        )
-        # index first, then corpus (an orphan index row only
-        # re-proposes a candidate — absorbed by the probe's
-        # match-level distinct)
-        _counts(raw).join(
-            survivors.select(id_col), id_col, "left_semi"
-        ).write.mode("append").parquet(index_path)
-        _corpus_append(survivors, batch_id)
-        if replay_guard == "watermark":
-            _write_wm(batch_id, max_ingested)
-        unpersist_all()
 
-    return (
-        stream_videos.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .start()
+        def append_index(survivors: DataFrame) -> None:
+            _counts(raw).join(
+                survivors.select(id_col), id_col, "left_semi"
+            ).write.mode("append").parquet(index_path)
+
+        return pairs.withColumnsRenamed({"id_a": "doc_a", "id_b": "doc_b"}), append_index
+
+    return _ingest_single_row(
+        stream_videos, "stream_video_dedup_ingest", corpus_path, checkpoint,
+        id_col, payload_col, replay_guard,
+        lambda spark: os.path.exists(index_path),
+        lambda spark, corpus: _counts(_raw(corpus)).write.parquet(index_path),
+        probe,
     )
 
 
@@ -1289,8 +1154,8 @@ def stream_text_containment_ingest(
 # ---------------------------------------------------------------------------
 # Chunked-CDC streaming containment for LONG media (VERDICT r8 #3):
 # an hour-scale recording never fits one micro-batch row, so it
-# arrives as ordered (clip_id, chunk_seq, samples) PCM chunk rows —
-# possibly spread across micro-batches — and the CDC segmenter must
+# arrives as ordered (clip_id, chunk_seq, payload) chunk rows —
+# possibly spread across micro-batches — and the segmenter must
 # re-assemble per clip with BOUNDED carry state (multimodal.
 # cdc_push_chunk: W-1 window tail + the open segment's partials,
 # O(W) per open clip regardless of recording length).
@@ -1300,22 +1165,39 @@ CHUNK_STATE_DDL = (
     "clip_id long, tail array<double>, seg_sum long, seg_len long, "
     "n_seen long, next_seq long"
 )
-_CHUNK_UPD_DDL = (
-    "clip_id long, seg_hashes array<long>, tail array<double>, "
-    "seg_sum long, seg_len long, n_seen long, next_seq long, "
-    "finished boolean"
+VIDEO_CHUNK_STATE_DDL = (
+    "clip_id long, stage string, buf binary, vids long, end long, "
+    "movi_end long, abs long, skip long, n_frames long, next_seq long"
 )
 
 
-def _read_ledger(table_path: str) -> dict | None:
-    import json
-    import os
+class _ChunkCodec(NamedTuple):
+    """What one chunked modality plugs into :func:`_apply_chunked_batch`.
 
-    p = os.path.join(table_path, "_applied_batch.json")
-    if not os.path.exists(p):
-        return None
-    with open(p) as f:
-        return json.load(f)
+    ``payload`` is the chunk column; ``state_ddl`` the carry-state
+    table (``clip_id`` first, ``next_seq`` last); ``new``/``load``/
+    ``dump`` (de)serialise one clip's carry state from/to a state row;
+    ``push(state, payload) -> (state, hashes)`` and ``finish(state) ->
+    hashes`` run the incremental kernel; ``hashes``/``hash_col`` name
+    the per-batch hash list and the seg/index hash column; ``multiset``
+    keeps hash multiplicity (index rows carry ``c``); ``containment``
+    scores ``common`` against ``least(n, inn)``, else Jaccard against
+    ``n + inn - common``; ``corpus_cols`` is (kernel count column, its
+    corpus name, corpus name of the clip size ``n``)."""
+
+    kind: str
+    payload: str
+    state_ddl: str
+    new: Callable
+    load: Callable
+    dump: Callable
+    push: Callable
+    finish: Callable
+    hashes: str
+    hash_col: str
+    multiset: bool
+    containment: bool
+    corpus_cols: tuple
 
 
 def _guard_lost_corpus(
@@ -1349,6 +1231,217 @@ def _guard_lost_corpus(
         )
 
 
+def _apply_chunked_batch(
+    batch_df: DataFrame,
+    batch_id: int,
+    codec: _ChunkCodec,
+    min_ppm: int,
+    *,
+    seg_path: str,
+    state_path: str,
+    index_path: str,
+    corpus_path: str,
+    id_col: str,
+) -> None:
+    """The one foreachBatch skeleton behind both chunked sinks
+    (:func:`apply_chunked_audio_batch`, :func:`apply_chunked_video_batch`).
+
+    Batch rows: ``(id_col, chunk_seq, <codec.payload>, is_last)`` — IN
+    ORDER per clip. Out-of-order or gapped arrival, and ``is_last`` on
+    a non-final chunk, raise loudly: a reorder buffer is upstream's
+    job, and a silently mis-ordered chunk would fabricate segment
+    boundaries.
+
+    Idempotence matrix (foreachBatch is AT-LEAST-once; every write is a
+    deterministic function of (state as of B−1, batch B)):
+
+    - completed hashes → ``seg_path`` partition ``ingest_batch=B`` via
+      DYNAMIC partition overwrite (replay rewrites its own partition —
+      the stream_docs_to_search_index pattern);
+    - survivor index rows / corpus metadata → same pattern on
+      ``index_path`` / ``corpus_path``;
+    - carry state → ``write_and_swap`` with the ``_applied_batch``
+      ledger INSIDE the swap (the refresh_additive_agg pattern), and
+      this swap happens LAST, so a crash anywhere earlier replays into
+      identical partition overwrites, and a replay after the swap is a
+      recorded no-op.
+
+    Decision rule: a clip that FINISHES this batch is dropped iff its
+    hash set (multiset if ``codec.multiset``) scores ≥ ``min_ppm``
+    (exact-integer cross-multiply, ``common`` = multiset intersection)
+    against any already-ingested clip or a lower-id clip finishing in
+    the same batch; a clip with no hashes has no evidence and is
+    dropped. Both probes are ONE rule over different peer frames. The
+    index probe reads ``ingest_batch != batch_id``: a crashed prior
+    attempt of THIS batch may already have written its index
+    partition, and probing it would self-match every replayed finishing
+    clip at 1e6 ppm (and invert same-batch lower-id-wins decisions);
+    because an EMPTY dynamic overwrite is a no-op, the emptied survivor
+    set would never rewrite the stale partition and the state swap
+    would seal a permanent index/corpus split. Excluding our own
+    partition makes a replay see exactly the original attempt's
+    inputs (partition-pruned scan). Earlier partitions are NOT
+    excluded by id: a clip id finishing a second time matches its own
+    earlier index rows."""
+    import json
+    import os
+
+    import pandas as pd
+
+    from dataflow_python_etl_spark.operators.upsert import write_and_swap
+
+    spark = batch_df.sparkSession
+    ledger_path = os.path.join(state_path, "_applied_batch.json")
+    ledger = None
+    if os.path.exists(ledger_path):
+        with open(ledger_path) as f:
+            ledger = json.load(f)
+    if ledger is not None and batch_id <= int(ledger["batch_id"]):
+        return  # fully committed — replay is a no-op
+    _guard_lost_corpus(ledger, corpus_path, batch_id, codec.kind)
+    chunks = batch_df.select(
+        F.col(id_col).alias("clip_id"), "chunk_seq", codec.payload, "is_last"
+    )
+    if chunks.isEmpty():
+        return
+    state = (
+        spark.read.parquet(state_path)
+        if os.path.exists(state_path)
+        else spark.createDataFrame([], codec.state_ddl)
+    )
+
+    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values("chunk_seq")
+        first = pdf.iloc[0]
+        clip = int(first["clip_id"])
+        if pd.isna(first["next_seq"]):
+            st, nxt = codec.new(), 0
+        else:
+            st, nxt = codec.load(first), int(first["next_seq"])
+        seqs = [int(s) for s in pdf["chunk_seq"]]
+        if seqs[0] != nxt or any(b != a + 1 for a, b in zip(seqs, seqs[1:])):
+            raise ValueError(
+                f"chunked {codec.kind} ingest: clip {clip} chunks "
+                f"arrived out of order (expected seq {nxt}, got {seqs}) — "
+                "ordered delivery is the upstream contract"
+            )
+        lasts = [bool(x) for x in pdf["is_last"]]
+        if any(lasts[:-1]):
+            raise ValueError(
+                f"chunked {codec.kind} ingest: clip {clip} has "
+                "is_last on a non-final chunk"
+            )
+        hashes: list = []
+        for payload in pdf[codec.payload]:
+            st, hs = codec.push(st, payload)
+            hashes.extend(hs)
+        finished = lasts[-1]
+        if finished:
+            hashes.extend(codec.finish(st))
+        row = {"clip_id": clip, codec.hashes: hashes, **codec.dump(st)}
+        row.update(next_seq=seqs[-1] + 1, finished=finished)
+        return pd.DataFrame([row])
+
+    carry = codec.state_ddl.split(", ", 1)[1]
+    upd = (
+        chunks.join(state, "clip_id", "left")
+        .groupBy("clip_id")
+        .applyInPandas(
+            kernel,
+            f"clip_id long, {codec.hashes} array<long>, {carry}, finished boolean",
+        )
+        .localCheckpoint(eager=True)  # 4 consumers; kernel runs once
+    )
+
+    def overwrite_own_partition(df: DataFrame, path: str) -> None:
+        (
+            df.withColumn("ingest_batch", F.lit(batch_id))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("ingest_batch")
+            .parquet(path)
+        )
+
+    # 1) this batch's completed hashes: replay overwrites itself
+    h = codec.hash_col
+    overwrite_own_partition(
+        upd.select("clip_id", F.explode(codec.hashes).alias(h)), seg_path
+    )
+
+    # 2) finished clips: assemble the full hash (multi)set, score, decide
+    n_col, n_name, size_name = codec.corpus_cols
+    fin = upd.where("finished").select("clip_id", n_col)
+    if not fin.isEmpty():
+        seg = spark.read.parquet(seg_path).join(fin.select("clip_id"), "clip_id", "left_semi")
+        if codec.multiset:
+            rows = seg.groupBy("clip_id", h).agg(F.count(F.lit(1)).cast("long").alias("c"))
+            sizes = rows.groupBy("clip_id").agg(F.sum("c").cast("long").alias("n"))
+            common = F.sum(F.least("c", "ic"))
+        else:
+            rows = seg.select("clip_id", h).distinct()
+            sizes = rows.groupBy("clip_id").agg(F.count(F.lit(1)).cast("long").alias("n"))
+            common = F.count(F.lit(1)).cast("long")
+        probe = rows.join(sizes, "clip_id").localCheckpoint(eager=True)
+        if codec.containment:
+            denom = F.least("n", "inn")
+        else:
+            denom = F.col("n") + F.col("inn") - F.col("common")
+
+        def matched(peers: DataFrame, lower_only: bool) -> DataFrame:
+            # finishing clips whose score against a peer frame (index
+            # rows or this batch's own probe) clears the threshold
+            other = peers.select(
+                F.col("clip_id").alias("cid"),
+                F.col(h).alias("__h"),
+                F.col("n").alias("inn"),
+                *([F.col("c").alias("ic")] if codec.multiset else []),
+            )
+            cond = F.col(h) == F.col("__h")
+            if lower_only:
+                cond = cond & (F.col("cid") < F.col("clip_id"))
+            return (
+                probe.join(other, cond)
+                .groupBy("clip_id", "cid")
+                .agg(common.alias("common"), F.first("n").alias("n"), F.first("inn").alias("inn"))
+                .where(F.col("common") * F.lit(1_000_000) >= F.lit(min_ppm) * denom)
+                .select("clip_id")
+            )
+
+        dropped = matched(probe, lower_only=True)
+        if os.path.exists(index_path):
+            idx = spark.read.parquet(index_path).where(F.col("ingest_batch") != F.lit(batch_id))
+            dropped = matched(idx, lower_only=False).unionByName(dropped)
+        # zero-hash clips are absent from sizes: dropped
+        survivors = sizes.select("clip_id").join(dropped, "clip_id", "left_anti")
+        overwrite_own_partition(probe.join(survivors, "clip_id", "left_semi"), index_path)
+        overwrite_own_partition(
+            fin.join(survivors, "clip_id", "left_semi")
+            .join(sizes, "clip_id")
+            .select("clip_id", F.col(n_col).alias(n_name), F.col("n").alias(size_name)),
+            corpus_path,
+        )
+
+    # 3) carry state LAST, ledger swapped atomically with it
+    new_state = state.join(upd.select("clip_id"), "clip_id", "left_anti").unionByName(
+        upd.where(~F.col("finished")).select(*state.columns)
+    )
+    write_and_swap(
+        new_state,
+        state_path,
+        extra_files={
+            "_applied_batch.json": json.dumps(
+                # corpus_written: evaluated AFTER the corpus write so the
+                # flag only turns true once a clip actually finished;
+                # _guard_lost_corpus keys off it on restart.
+                {
+                    "batch_id": batch_id,
+                    "corpus_written": os.path.exists(corpus_path),
+                }
+            )
+        },
+    )
+
+
 def apply_chunked_audio_batch(
     batch_df: DataFrame,
     batch_id: int,
@@ -1368,25 +1461,12 @@ def apply_chunked_audio_batch(
     Batch rows: ``(clip_id, chunk_seq, samples array<double>,
     is_last boolean)`` — decoded PCM chunks IN ORDER per clip (chunk
     splitting/container decode is the upstream landing contract at
-    100 TB; this sink owns reassembly, not demuxing). Out-of-order
-    or gapped arrival raises loudly: a reorder buffer is upstream's
-    job, and a silently mis-ordered chunk would fabricate segment
-    boundaries.
-
-    Idempotence matrix (foreachBatch is AT-LEAST-once; every write
-    here is a deterministic function of (state as of B−1, batch B)):
-
-    - completed segment hashes → ``seg_path`` partition
-      ``ingest_batch=B`` via DYNAMIC partition overwrite (replay
-      rewrites its own partition — the stream_docs_to_search_index
-      pattern);
-    - survivor index rows / corpus metadata → same pattern on
-      ``index_path`` / ``corpus_path``;
-    - carry state → ``write_and_swap`` with the ``_applied_batch``
-      ledger INSIDE the swap (the refresh_additive_agg pattern), and
-      this swap happens LAST, so a crash anywhere earlier replays
-      into identical partition overwrites, and a replay after the
-      swap is a recorded no-op.
+    100 TB; this sink owns reassembly, not demuxing). The carry state
+    (``CHUNK_STATE_DDL``) is ``multimodal.cdc_push_chunk``'s bounded
+    window tail + open-segment partials; the seg table holds
+    ``(clip_id, seg_hash)``, the index ``(clip_id, seg_hash, c, n)``
+    and the corpus ``(clip_id, n_samples, n_segments)``, each
+    partitioned by ``ingest_batch``.
 
     Decision rule (the other ingest sinks' survivor contract): a
     clip that FINISHES this batch is dropped iff its CDC segment
@@ -1396,230 +1476,42 @@ def apply_chunked_audio_batch(
     lower-id clip finishing in the same batch; a clip whose every
     segment fell under the CDC minimum has no evidence and is
     dropped ("no evidence, no ingest" — the DSIR-gate discipline).
+    Ordering checks, the idempotence matrix and replay safety are
+    the shared :func:`_apply_chunked_batch` contract.
     """
-    import json
-    import os
-
-    import pandas as pd
-
     from dataflow_python_etl_spark.operators.multimodal import (
         cdc_finish,
         cdc_push_chunk,
         cdc_state_new,
     )
-    from dataflow_python_etl_spark.operators.upsert import write_and_swap
 
-    spark = batch_df.sparkSession
-    ledger = _read_ledger(state_path)
-    applied = None if ledger is None else int(ledger["batch_id"])
-    if applied is not None and batch_id <= applied:
-        return  # fully committed — replay is a no-op
-    _guard_lost_corpus(ledger, corpus_path, batch_id, "audio")
-    chunks = batch_df.select(
-        F.col(id_col).alias("clip_id"), "chunk_seq", "samples", "is_last"
-    )
-    if chunks.isEmpty():
-        return
-    state = (
-        spark.read.parquet(state_path)
-        if os.path.exists(state_path)
-        else spark.createDataFrame([], CHUNK_STATE_DDL)
-    )
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("chunk_seq")
-        first = pdf.iloc[0]
-        if pd.isna(first["next_seq"]):
-            st, nxt = cdc_state_new(), 0
-        else:
-            st = (
-                list(first["tail"]),
-                int(first["seg_sum"]),
-                int(first["seg_len"]),
-                int(first["n_seen"]),
-            )
-            nxt = int(first["next_seq"])
-        seqs = [int(s) for s in pdf["chunk_seq"]]
-        if seqs[0] != nxt or any(b != a + 1 for a, b in zip(seqs, seqs[1:])):
-            raise ValueError(
-                f"chunked audio ingest: clip {int(first['clip_id'])} chunks "
-                f"arrived out of order (expected seq {nxt}, got {seqs}) — "
-                "ordered delivery is the upstream contract"
-            )
-        lasts = [bool(x) for x in pdf["is_last"]]
-        if any(lasts[:-1]):
-            raise ValueError(
-                f"chunked audio ingest: clip {int(first['clip_id'])} has "
-                "is_last on a non-final chunk"
-            )
-        hashes: list = []
-        for samples in pdf["samples"]:
-            st, hs = cdc_push_chunk(st, samples)
-            hashes.extend(hs)
-        finished = lasts[-1]
-        if finished:
-            hashes.extend(cdc_finish(st))
-        tail, seg_sum, seg_len, n_seen = st
-        return pd.DataFrame(
-            [
-                {
-                    "clip_id": int(first["clip_id"]),
-                    "seg_hashes": hashes,
-                    "tail": [float(x) for x in tail],
-                    "seg_sum": seg_sum,
-                    "seg_len": seg_len,
-                    "n_seen": n_seen,
-                    "next_seq": seqs[-1] + 1,
-                    "finished": finished,
-                }
-            ]
-        )
-
-    upd = (
-        chunks.join(state, "clip_id", "left")
-        .groupBy("clip_id")
-        .applyInPandas(kernel, _CHUNK_UPD_DDL)
-        .localCheckpoint(eager=True)  # 4 consumers; kernel runs once
-    )
-
-    # 1) this batch's completed segments: replay overwrites itself
-    (
-        upd.select("clip_id", F.explode("seg_hashes").alias("seg_hash"))
-        .withColumn("ingest_batch", F.lit(batch_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("ingest_batch")
-        .parquet(seg_path)
-    )
-
-    # 2) finished clips: assemble full multiset, score, ingest-or-drop
-    fin = upd.where("finished").select("clip_id", "n_seen")
-    if not fin.isEmpty():
-        counts = (
-            spark.read.parquet(seg_path)
-            .join(fin.select("clip_id"), "clip_id", "left_semi")
-            .groupBy("clip_id", "seg_hash")
-            .agg(F.count(F.lit(1)).cast("long").alias("c"))
-        )
-        sizes = counts.groupBy("clip_id").agg(F.sum("c").cast("long").alias("n"))
-        probe = counts.join(sizes, "clip_id").localCheckpoint(eager=True)
-        dropped = spark.createDataFrame([], "clip_id long")
-        if os.path.exists(index_path):
-            # Replay safety: a crashed prior attempt of THIS batch may
-            # already have written index partition ingest_batch=B; probing
-            # against it would self-match every replayed finishing clip at
-            # 1e6 ppm (and invert same-batch lower-id-wins peer decisions),
-            # then the dynamic overwrite of an emptied survivor set no-ops
-            # and the state swap seals a permanent index/corpus split.
-            # Excluding our own partition makes replay see exactly the
-            # inputs the original attempt saw (partition-pruned scan).
-            idx = (
-                spark.read.parquet(index_path)
-                .where(F.col("ingest_batch") != F.lit(batch_id))
-                .select(
-                    F.col("clip_id").alias("cid"),
-                    "seg_hash",
-                    F.col("c").alias("ic"),
-                    F.col("n").alias("inn"),
-                )
-            )
-            dropped = (
-                probe.join(idx, "seg_hash")
-                .groupBy("clip_id", "cid")
-                .agg(
-                    F.sum(F.least("c", "ic")).alias("common"),
-                    F.first("n").alias("n"),
-                    F.first("inn").alias("inn"),
-                )
-                .where(
-                    F.col("common") * F.lit(1_000_000)
-                    >= F.lit(min_containment_ppm) * F.least("n", "inn")
-                )
-                .select("clip_id")
-                .distinct()
-            )
-        a, b = probe.alias("a"), probe.alias("b")
-        peer_dropped = (
-            a.join(
-                b,
-                (F.col("a.seg_hash") == F.col("b.seg_hash"))
-                & (F.col("a.clip_id") < F.col("b.clip_id")),
-            )
-            .groupBy(
-                F.col("b.clip_id").alias("clip_id"),
-                F.col("a.clip_id").alias("peer"),
-            )
-            .agg(
-                F.sum(F.least(F.col("a.c"), F.col("b.c"))).alias("common"),
-                F.first(F.col("a.n")).alias("na"),
-                F.first(F.col("b.n")).alias("nb"),
-            )
-            .where(
-                F.col("common") * F.lit(1_000_000)
-                >= F.lit(min_containment_ppm) * F.least("na", "nb")
-            )
-            .select("clip_id")
-            .distinct()
-        )
-        survivors = (
-            sizes.select("clip_id")  # zero-segment clips absent: dropped
-            .join(dropped.unionByName(peer_dropped), "clip_id", "left_anti")
-        )
-        (
-            probe.join(survivors, "clip_id", "left_semi")
-            .withColumn("ingest_batch", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ingest_batch")
-            .parquet(index_path)
-        )
-        (
-            fin.join(survivors, "clip_id", "left_semi")
-            .join(sizes, "clip_id")
-            .select(
-                "clip_id",
-                F.col("n_seen").alias("n_samples"),
-                F.col("n").alias("n_segments"),
-            )
-            .withColumn("ingest_batch", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ingest_batch")
-            .parquet(corpus_path)
-        )
-
-    # 3) carry state LAST, ledger swapped atomically with it
-    new_state = state.join(upd.select("clip_id"), "clip_id", "left_anti").unionByName(
-        upd.where(~F.col("finished")).select(
-            "clip_id", "tail", "seg_sum", "seg_len", "n_seen", "next_seq"
-        )
-    )
-    write_and_swap(
-        new_state,
-        state_path,
-        extra_files={
-            "_applied_batch.json": json.dumps(
-                # corpus_written: evaluated AFTER the corpus write so the
-                # flag only turns true once a clip actually finished;
-                # _guard_lost_corpus keys off it on restart.
-                {
-                    "batch_id": batch_id,
-                    "corpus_written": os.path.exists(corpus_path),
-                }
-            )
+    codec = _ChunkCodec(
+        kind="audio",
+        payload="samples",
+        state_ddl=CHUNK_STATE_DDL,
+        new=cdc_state_new,
+        load=lambda r: (
+            list(r["tail"]), int(r["seg_sum"]), int(r["seg_len"]), int(r["n_seen"])
+        ),
+        dump=lambda st: {
+            "tail": [float(x) for x in st[0]],
+            "seg_sum": st[1],
+            "seg_len": st[2],
+            "n_seen": st[3],
         },
+        push=cdc_push_chunk,
+        finish=cdc_finish,
+        hashes="seg_hashes",
+        hash_col="seg_hash",
+        multiset=True,
+        containment=True,
+        corpus_cols=("n_seen", "n_samples", "n_segments"),
     )
-
-
-VIDEO_CHUNK_STATE_DDL = (
-    "clip_id long, stage string, buf binary, vids long, end long, "
-    "movi_end long, abs long, skip long, n_frames long, next_seq long"
-)
-_VIDEO_CHUNK_UPD_DDL = (
-    "clip_id long, frame_hashes array<long>, stage string, buf binary, "
-    "vids long, end long, movi_end long, abs long, skip long, "
-    "n_frames long, next_seq long, finished boolean"
-)
+    _apply_chunked_batch(
+        batch_df, batch_id, codec, min_containment_ppm, seg_path=seg_path,
+        state_path=state_path, index_path=index_path, corpus_path=corpus_path,
+        id_col=id_col,
+    )
 
 
 def apply_chunked_video_batch(
@@ -1641,8 +1533,9 @@ def apply_chunked_video_batch(
     landing contract; boundaries need not align with frames or RIFF
     chunks — the carry state is an incremental parser,
     ``multimodal.video_cdc_push_chunk``, whose buffer stays bounded
-    by one frame). Out-of-order/gapped arrival and mid-clip is_last
-    raise loudly, as in the audio sink.
+    by one frame). The seg table holds ``(clip_id, frame_hash)``, the
+    index ``(clip_id, frame_hash, n)`` and the corpus ``(clip_id,
+    n_frames, n_distinct_hashes)``.
 
     Decision rule — the batch :func:`~.multimodal.video_near_dup_pairs`
     arithmetic exactly: a finishing clip is dropped iff its DISTINCT
@@ -1652,210 +1545,48 @@ def apply_chunked_video_batch(
     batch; a clip whose stream carried no frames fails loudly at
     ``video_cdc_finish`` (a corrupt upload is an error, not a silent
     drop — unlike audio's no-evidence rule, zero frames here means a
-    malformed container).
-
-    Idempotence matrix: identical to the audio sink — per-batch
-    DYNAMIC partition overwrites for frame hashes / survivor index /
-    corpus, the state+ledger ``write_and_swap`` LAST, and the index
-    probe filtered to ``ingest_batch != batch_id`` so a crash-replay
-    after the index write reproduces the original attempt's inputs
-    (the round-10 ADVICE fix, applied here from birth)."""
-    import json
-    import os
-
-    import pandas as pd
-
+    malformed container). Ordering checks, the idempotence matrix
+    and replay safety are the shared :func:`_apply_chunked_batch`
+    contract."""
     from dataflow_python_etl_spark.operators.multimodal import (
         video_cdc_finish,
         video_cdc_push_chunk,
         video_cdc_state_new,
     )
-    from dataflow_python_etl_spark.operators.upsert import write_and_swap
 
-    spark = batch_df.sparkSession
-    ledger = _read_ledger(state_path)
-    applied = None if ledger is None else int(ledger["batch_id"])
-    if applied is not None and batch_id <= applied:
-        return  # fully committed — replay is a no-op
-    _guard_lost_corpus(ledger, corpus_path, batch_id, "video")
-    chunks = batch_df.select(
-        F.col(id_col).alias("clip_id"), "chunk_seq", "data", "is_last"
-    )
-    if chunks.isEmpty():
-        return
-    state = (
-        spark.read.parquet(state_path)
-        if os.path.exists(state_path)
-        else spark.createDataFrame([], VIDEO_CHUNK_STATE_DDL)
-    )
     scalar_keys = ("vids", "end", "movi_end", "abs", "skip", "n_frames")
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("chunk_seq")
-        first = pdf.iloc[0]
-        if pd.isna(first["next_seq"]):
-            st, nxt = video_cdc_state_new(), 0
-        else:
-            st = {"stage": first["stage"], "buf": bytes(first["buf"])}
-            st.update({k: int(first[k]) for k in scalar_keys})
-            nxt = int(first["next_seq"])
-        seqs = [int(s) for s in pdf["chunk_seq"]]
-        if seqs[0] != nxt or any(b != a + 1 for a, b in zip(seqs, seqs[1:])):
-            raise ValueError(
-                f"chunked video ingest: clip {int(first['clip_id'])} chunks "
-                f"arrived out of order (expected seq {nxt}, got {seqs}) — "
-                "ordered delivery is the upstream contract"
-            )
-        lasts = [bool(x) for x in pdf["is_last"]]
-        if any(lasts[:-1]):
-            raise ValueError(
-                f"chunked video ingest: clip {int(first['clip_id'])} has "
-                "is_last on a non-final chunk"
-            )
-        hashes: list = []
-        for data in pdf["data"]:
-            st, hs = video_cdc_push_chunk(st, bytes(data))
-            hashes.extend(hs)
-        finished = lasts[-1]
-        if finished:
-            video_cdc_finish(st)  # loud on truncation / no frames
-        row = {
-            "clip_id": int(first["clip_id"]),
-            "frame_hashes": hashes,
+    def finish(st: dict) -> list:
+        video_cdc_finish(st)  # loud on truncation / no frames
+        return []
+
+    codec = _ChunkCodec(
+        kind="video",
+        payload="data",
+        state_ddl=VIDEO_CHUNK_STATE_DDL,
+        new=video_cdc_state_new,
+        load=lambda r: {
+            "stage": r["stage"],
+            "buf": bytes(r["buf"]),
+            **{k: int(r[k]) for k in scalar_keys},
+        },
+        dump=lambda st: {
             "stage": st["stage"],
             "buf": bytearray(st["buf"]),
-            "next_seq": seqs[-1] + 1,
-            "finished": finished,
-        }
-        row.update({k: int(st[k]) for k in scalar_keys})
-        return pd.DataFrame([row])
-
-    upd = (
-        chunks.join(state, "clip_id", "left")
-        .groupBy("clip_id")
-        .applyInPandas(kernel, _VIDEO_CHUNK_UPD_DDL)
-        .localCheckpoint(eager=True)  # 4 consumers; kernel runs once
-    )
-
-    # 1) this batch's completed frame hashes: replay overwrites itself
-    (
-        upd.select("clip_id", F.explode("frame_hashes").alias("frame_hash"))
-        .withColumn("ingest_batch", F.lit(batch_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("ingest_batch")
-        .parquet(seg_path)
-    )
-
-    # 2) finished clips: assemble DISTINCT hash set, Jaccard, decide
-    fin = upd.where("finished").select("clip_id", "n_frames")
-    if not fin.isEmpty():
-        hset = (
-            spark.read.parquet(seg_path)
-            .join(fin.select("clip_id"), "clip_id", "left_semi")
-            .select("clip_id", "frame_hash")
-            .distinct()
-        )
-        sizes = hset.groupBy("clip_id").agg(F.count(F.lit(1)).cast("long").alias("n"))
-        probe = hset.join(sizes, "clip_id").localCheckpoint(eager=True)
-        dropped = spark.createDataFrame([], "clip_id long")
-        if os.path.exists(index_path):
-            # replay safety: exclude our own partition (see audio twin)
-            idx = (
-                spark.read.parquet(index_path)
-                .where(F.col("ingest_batch") != F.lit(batch_id))
-                .select(
-                    F.col("clip_id").alias("cid"),
-                    "frame_hash",
-                    F.col("n").alias("inn"),
-                )
-            )
-            dropped = (
-                probe.join(idx, "frame_hash")
-                .groupBy("clip_id", "cid")
-                .agg(
-                    F.count(F.lit(1)).cast("long").alias("common"),
-                    F.first("n").alias("n"),
-                    F.first("inn").alias("inn"),
-                )
-                .where(
-                    F.col("common") * F.lit(1_000_000)
-                    >= F.lit(min_jaccard_ppm)
-                    * (F.col("n") + F.col("inn") - F.col("common"))
-                )
-                .select("clip_id")
-                .distinct()
-            )
-        a, b = probe.alias("a"), probe.alias("b")
-        peer_dropped = (
-            a.join(
-                b,
-                (F.col("a.frame_hash") == F.col("b.frame_hash"))
-                & (F.col("a.clip_id") < F.col("b.clip_id")),
-            )
-            .groupBy(
-                F.col("b.clip_id").alias("clip_id"),
-                F.col("a.clip_id").alias("peer"),
-            )
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("common"),
-                F.first(F.col("a.n")).alias("na"),
-                F.first(F.col("b.n")).alias("nb"),
-            )
-            .where(
-                F.col("common") * F.lit(1_000_000)
-                >= F.lit(min_jaccard_ppm)
-                * (F.col("na") + F.col("nb") - F.col("common"))
-            )
-            .select("clip_id")
-            .distinct()
-        )
-        survivors = sizes.select("clip_id").join(
-            dropped.unionByName(peer_dropped), "clip_id", "left_anti"
-        )
-        (
-            probe.join(survivors, "clip_id", "left_semi")
-            .select("clip_id", "frame_hash", "n")
-            .withColumn("ingest_batch", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ingest_batch")
-            .parquet(index_path)
-        )
-        (
-            fin.join(survivors, "clip_id", "left_semi")
-            .join(sizes, "clip_id")
-            .select(
-                "clip_id",
-                F.col("n_frames").alias("n_frames"),
-                F.col("n").alias("n_distinct_hashes"),
-            )
-            .withColumn("ingest_batch", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ingest_batch")
-            .parquet(corpus_path)
-        )
-
-    # 3) carry state LAST, ledger swapped atomically with it
-    new_state = state.join(upd.select("clip_id"), "clip_id", "left_anti").unionByName(
-        upd.where(~F.col("finished")).select(
-            "clip_id", "stage", "buf", "vids", "end", "movi_end", "abs",
-            "skip", "n_frames", "next_seq",
-        )
-    )
-    write_and_swap(
-        new_state,
-        state_path,
-        extra_files={
-            "_applied_batch.json": json.dumps(
-                # corpus_written: see the audio twin — restart guard flag.
-                {
-                    "batch_id": batch_id,
-                    "corpus_written": os.path.exists(corpus_path),
-                }
-            )
+            **{k: int(st[k]) for k in scalar_keys},
         },
+        push=lambda st, data: video_cdc_push_chunk(st, bytes(data)),
+        finish=finish,
+        hashes="frame_hashes",
+        hash_col="frame_hash",
+        multiset=False,
+        containment=False,
+        corpus_cols=("n_frames", "n_frames", "n_distinct_hashes"),
+    )
+    _apply_chunked_batch(
+        batch_df, batch_id, codec, min_jaccard_ppm, seg_path=seg_path,
+        state_path=state_path, index_path=index_path, corpus_path=corpus_path,
+        id_col=id_col,
     )
 
 
@@ -1936,78 +1667,6 @@ def stream_chunked_audio_containment_ingest(
 
     return (
         stream_chunks.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .start()
-    )
-
-
-def stream_scd2_to_table(
-    stream_df: DataFrame,
-    table_path: str,
-    checkpoint: str,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    attr_col: str = "event_type",
-    id_col: str = "event_id",
-) -> "pyspark.sql.streaming.StreamingQuery":  # noqa: F821
-    """Maintain a Type-2 dimension table from a live observation
-    stream: ``foreachBatch`` + the batch ``scd2_apply_changes``
-    operator, so the streamed history is bit-identical to a batch
-    ``scd2_intervals`` over the same in-order events (parity-pinned).
-
-    Batch 0 bootstraps the table with ``scd2_intervals``; every later
-    micro-batch applies incrementally — per-batch cost is (touched
-    entities + batch), never table history, which is what makes the
-    sink viable against a dimension with years of closed rows.
-
-    Replay guard: a restarted checkpoint re-delivers a batch whose
-    rows are already in the table; ``scd2_apply_changes`` would
-    (correctly, for batch CDC) fail LOUDLY on those now-stale
-    observations, so the sink first drops per-entity observations not
-    STRICTLY later than the entity's current ``valid_from`` — exactly
-    the rows a replay re-delivers — making replay a no-op (pinned).
-    The trade, inherent to streaming SCD2: a genuinely late
-    observation older than its entity's open interval is dropped too
-    (closed history is immutable from a stream); route late data
-    through the batch operator, which refuses it loudly instead.
-    Writes go through ``write_and_swap`` — readers see the old or the
-    new history, never a torn one; ``_guard_missing_table`` applies
-    on restart like every sink in this module.
-    """
-    from dataflow_python_etl_spark.operators.events import (
-        scd2_apply_changes,
-        scd2_intervals,
-    )
-    from dataflow_python_etl_spark.operators.upsert import write_and_swap
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        import os
-
-        spark = batch_df.sparkSession
-        _guard_missing_table(table_path, batch_id)
-        if not os.path.exists(table_path):
-            hist = scd2_intervals(batch_df, user_col, ts_col, attr_col, id_col)
-            # atomic create (rename of a completed tmp dir): a crash
-            # mid-bootstrap must not leave a torn table_path that the
-            # batch-0 replay would then treat as a valid dimension and
-            # apply incrementally against
-            write_and_swap(hist, table_path)
-            return
-        dim = spark.read.parquet(table_path)
-        cur = dim.where(F.col("is_current")).select(
-            F.col(user_col), F.col("valid_from").alias("__cur_vf")
-        )
-        fresh = (
-            batch_df.join(cur, on=user_col, how="left")
-            .where(F.col("__cur_vf").isNull() | (F.col(ts_col) > F.col("__cur_vf")))
-            .drop("__cur_vf")
-        )
-        hist = scd2_apply_changes(dim, fresh, user_col, ts_col, attr_col, id_col)
-        write_and_swap(hist, table_path)
-
-    return (
-        stream_df.writeStream.foreachBatch(apply_batch)
         .option("checkpointLocation", checkpoint)
         .outputMode("append")
         .start()
@@ -2277,44 +1936,4 @@ def conversion_join(
         F.expr("(unix_micros(c_ts) - unix_micros(t_ts)) div 1000000").alias(
             "lag_seconds"
         ),
-    )
-
-
-def m4_stream(
-    events: DataFrame,
-    bucket: str = "10 minutes",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Streaming M4 rollup — the live-dashboard twin of
-    ``operators.timeseries.m4_downsample``: per (series, event-time
-    tumbling bucket) keep count/min/max/FIRST/LAST, the four points
-    that render a line chart error-free. Works identically on a
-    batch frame (the watermark is only attached to streams), which
-    is what the parity test pins.
-
-    first/last are ``min_by``/``max_by`` on (ts, id) — declarative
-    aggregates, so the streaming planner keeps ONE state row per
-    (series, bucket) updated incrementally; the watermark bounds
-    state to the buckets still inside the lateness horizon. No
-    arbitrary stateful operator needed — this is the "windowed agg
-    beats applyInPandasWithState when the metric is declarative"
-    case."""
-    e = events.withWatermark("ts", watermark) if events.isStreaming else events
-    order = F.struct(F.col("ts"), F.col("event_id"))
-    return (
-        e.groupBy(
-            F.window("ts", bucket).alias("w"),
-            F.col("event_type").alias("series"),
-        )
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.round(F.min_by("value", order), 2).alias("v_first"),
-            F.round(F.min("value"), 2).alias("v_min"),
-            F.round(F.max("value"), 2).alias("v_max"),
-            F.round(F.max_by("value", order), 2).alias("v_last"),
-        )
-        .select(
-            F.col("w.start").alias("bucket_start"),
-            "series", "n", "v_first", "v_min", "v_max", "v_last",
-        )
     )

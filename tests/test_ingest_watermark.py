@@ -1,4 +1,6 @@
-"""Ingest-watermark replay guard for stream_dedup_ingest.
+"""Ingest-watermark replay guard for the single-row ingest sinks
+(text ``stream_dedup_ingest``, ``stream_image_dedup_ingest``,
+``stream_video_dedup_ingest``).
 
 The anti-join replay guard scans the corpus's id column every batch —
 a cost growing with the corpus forever. With MONOTONE doc ids the same
@@ -11,10 +13,16 @@ hive partitions overwritten idempotently on replay.
 import json
 import os
 
-from pyspark.sql import functions as F
+import numpy as np
+import pytest
 
 from dataflow_python_etl_spark.plans.checks import count_exchanges, explain_str
-from dataflow_python_etl_spark.streaming.pipeline import _guard_replay, stream_dedup_ingest
+from dataflow_python_etl_spark.streaming.pipeline import (
+    _guard_replay,
+    stream_dedup_ingest,
+    stream_image_dedup_ingest,
+    stream_video_dedup_ingest,
+)
 
 TEXTS = {
     "a": "the quick brown fox jumps over the lazy dog near the old river bank today",
@@ -28,8 +36,46 @@ def _docs(spark, rows):
     return spark.createDataFrame(rows, "doc_id: long, text: string")
 
 
-def _corpus_ids(spark, path):
-    return sorted(r["doc_id"] for r in spark.read.parquet(path).select("doc_id").collect())
+def _corpus_ids(spark, path, id_col="doc_id"):
+    return sorted(r[id_col] for r in spark.read.parquet(path).select(id_col).collect())
+
+
+def _png(seed):
+    from dataflow_python_etl_spark.operators.codecs import encode_png
+
+    px = np.random.RandomState(seed).randint(0, 200, size=(32, 32)).astype(np.uint8)
+    return bytearray(encode_png(px))
+
+
+def _gif(seed):
+    from dataflow_python_etl_spark.operators.codecs import encode_gif
+
+    rng = np.random.RandomState(seed)
+    frames = [
+        np.repeat(rng.randint(0, 256, size=(16, 16, 1)), 3, axis=2).astype(np.uint8)
+        for _ in range(4)
+    ]
+    return bytearray(encode_gif(frames))
+
+
+# One case per single-row sink: (sink, id column, source DDL, payload
+# per TEXTS key). A repeated key is an exact duplicate in every
+# modality, so the same batch scripts decide the same survivors.
+SINKS = {
+    "text": (stream_dedup_ingest, "doc_id", "doc_id long, text string", TEXTS),
+    "image": (
+        stream_image_dedup_ingest,
+        "image_id",
+        "image_id long, payload binary",
+        {k: _png(i) for i, k in enumerate(TEXTS, start=1)},
+    ),
+    "video": (
+        stream_video_dedup_ingest,
+        "video_id",
+        "video_id long, payload binary",
+        {k: _gif(i) for i, k in enumerate(TEXTS, start=71)},
+    ),
+}
 
 
 def test_watermark_guard_plan_never_touches_the_corpus(spark, tmp_path):
@@ -89,9 +135,10 @@ def test_watermark_ingest_matches_anti_join_twin(spark, tmp_path):
     assert wm["max_id"] == 14
 
 
-def _run_once(spark, src, corpus, index, ckpt):
-    q = stream_dedup_ingest(
-        spark.readStream.schema("doc_id long, text string").parquet(src),
+def _run_once(spark, src, corpus, index, ckpt, sink=stream_dedup_ingest,
+              ddl="doc_id long, text string"):
+    q = sink(
+        spark.readStream.schema(ddl).parquet(src),
         corpus,
         index,
         ckpt,
@@ -99,6 +146,21 @@ def _run_once(spark, src, corpus, index, ckpt):
     )
     q.processAllAvailable()
     q.stop()
+
+
+def _writer(spark, kind):
+    """(write(rows) appending keyed rows to a source dir, run(...)
+    one watermark-mode drain, corpus_ids(path)) for one sink case."""
+    sink, id_col, ddl, payloads = SINKS[kind]
+
+    def write(src, rows):
+        data = [(i, payloads[k]) for i, k in rows]
+        spark.createDataFrame(data, ddl).coalesce(1).write.mode("append").parquet(src)
+
+    def run(src, corpus, index, ckpt):
+        _run_once(spark, src, corpus, index, ckpt, sink, ddl)
+
+    return write, run, lambda path: _corpus_ids(spark, path, id_col)
 
 
 def _drop_newest_commit(ckpt):
@@ -110,35 +172,38 @@ def _drop_newest_commit(ckpt):
         os.remove(crc)
 
 
-def test_watermark_crash_replay_converges(spark, tmp_path):
-    """Replay convergence at every crash point past the corpus append.
+@pytest.mark.parametrize("kind", list(SINKS))
+def test_watermark_crash_replay_converges(spark, tmp_path, kind):
+    """Replay convergence at every crash point past the corpus append,
+    for every single-row sink.
 
     (a) crash after full commit → replay is a batch_id no-op;
     (b) crash between corpus append and watermark write → full
         reprocess against a corpus that already contains the batch;
         the dynamic partition overwrite is idempotent, no dup rows."""
+    write, run, ids = _writer(spark, kind)
     src = str(tmp_path / "in")
     corpus = str(tmp_path / "corpus")
     index = str(tmp_path / "index")
     ckpt = str(tmp_path / "ckpt")
     wm_path = corpus + ".__ingest_watermark"
 
-    _docs(spark, [(1, TEXTS["a"]), (2, TEXTS["b"])]).coalesce(1).write.mode("append").parquet(src)
-    _run_once(spark, src, corpus, index, ckpt)
+    write(src, [(1, "a"), (2, "b")])
+    run(src, corpus, index, ckpt)
     wm1 = json.load(open(wm_path))
-    # batch 1: 11 dups corpus doc 1, 12 unique
-    _docs(spark, [(11, TEXTS["a"]), (12, TEXTS["c"])]).coalesce(1).write.mode("append").parquet(src)
-    _run_once(spark, src, corpus, index, ckpt)
+    # batch 1: 11 dups corpus item 1, 12 unique
+    write(src, [(11, "a"), (12, "c")])
+    run(src, corpus, index, ckpt)
     want = [1, 2, 12]
-    assert _corpus_ids(spark, corpus) == want
+    assert ids(corpus) == want
     wm2 = json.load(open(wm_path))
     assert wm2["max_id"] == 12  # 11 was DECIDED (dropped), so covered
 
     # (a) lost commit marker only: batch 1 replays, wm says it fully
     # committed (batch_id match) → pure no-op
     _drop_newest_commit(ckpt)
-    _run_once(spark, src, corpus, index, ckpt)
-    assert _corpus_ids(spark, corpus) == want
+    run(src, corpus, index, ckpt)
+    assert ids(corpus) == want
     assert json.load(open(wm_path)) == wm2
 
     # (b) crash BETWEEN corpus append and watermark write: corpus has
@@ -147,30 +212,32 @@ def test_watermark_crash_replay_converges(spark, tmp_path):
     _drop_newest_commit(ckpt)
     with open(wm_path, "w") as f:
         json.dump(wm1, f)
-    _run_once(spark, src, corpus, index, ckpt)
-    assert _corpus_ids(spark, corpus) == want  # no dup rows, no lost rows
+    run(src, corpus, index, ckpt)
+    assert ids(corpus) == want  # no dup rows, no lost rows
     assert json.load(open(wm_path))["max_id"] == 12
 
 
-def test_watermark_crash_before_corpus_append_converges(spark, tmp_path):
+@pytest.mark.parametrize("kind", list(SINKS))
+def test_watermark_crash_before_corpus_append_converges(spark, tmp_path, kind):
     """Crash AFTER the index append but BEFORE the corpus append: the
-    index holds the batch's bands twice after replay (harmless — same
+    index holds the batch's rows twice after replay (harmless — same
     candidates re-proposed), the corpus partition is written exactly
     once."""
     import shutil
 
+    write, run, ids = _writer(spark, kind)
     src = str(tmp_path / "in")
     corpus = str(tmp_path / "corpus")
     index = str(tmp_path / "index")
     ckpt = str(tmp_path / "ckpt")
     wm_path = corpus + ".__ingest_watermark"
 
-    _docs(spark, [(1, TEXTS["a"])]).coalesce(1).write.mode("append").parquet(src)
-    _run_once(spark, src, corpus, index, ckpt)
+    write(src, [(1, "a")])
+    run(src, corpus, index, ckpt)
     wm1 = json.load(open(wm_path))
-    _docs(spark, [(11, TEXTS["a"]), (12, TEXTS["d"])]).coalesce(1).write.mode("append").parquet(src)
-    _run_once(spark, src, corpus, index, ckpt)
-    assert _corpus_ids(spark, corpus) == [1, 12]
+    write(src, [(11, "a"), (12, "d")])
+    run(src, corpus, index, ckpt)
+    assert ids(corpus) == [1, 12]
 
     # rewind to the crash window: wm at batch 0, batch 1's corpus
     # partition gone, index append already happened (we leave it)
@@ -178,8 +245,8 @@ def test_watermark_crash_before_corpus_append_converges(spark, tmp_path):
     with open(wm_path, "w") as f:
         json.dump(wm1, f)
     shutil.rmtree(os.path.join(corpus, "ingest_batch=1"))
-    _run_once(spark, src, corpus, index, ckpt)
-    assert _corpus_ids(spark, corpus) == [1, 12]
+    run(src, corpus, index, ckpt)
+    assert ids(corpus) == [1, 12]
 
 
 def test_watermark_empty_first_batch(spark, tmp_path):

@@ -73,3 +73,45 @@ def test_driver_memory_override_warns_when_context_exists(spark, monkeypatch):
         and "SPARK_GRAFT_DRIVER_MEMORY" in str(x.message)
         for x in w
     )
+
+
+@pytest.mark.parametrize("x", [float("nan"), float("inf"), float("-inf"), -0.0, 1e-310])
+def test_dlit_parses_to_the_same_double_as_lit(spark, x):
+    # non-finite doubles have no SQL literal syntax: dlit must still
+    # render something the parser reads back as the identical double
+    import math
+
+    from dataflow_python_etl_spark.functions.vectors import darr, dlit
+
+    got = spark.range(1).select(
+        F.expr(dlit(x)).alias("d"), F.expr(darr([x, 2.5])).alias("a"), F.lit(x).alias("l")
+    ).first()
+    for v in (got["d"], got["a"][0]):
+        if math.isnan(x):
+            assert math.isnan(v) and math.isnan(got["l"])
+        else:
+            assert v == got["l"] == x and math.copysign(1, v) == math.copysign(1, x)
+
+
+def test_lzw_base_table_is_immutable():
+    from dataflow_python_etl_spark.operators.codecs import _lzw_base
+
+    base = _lzw_base(4)
+    assert base is _lzw_base(4)  # one cached instance per code size
+    assert isinstance(base, tuple) and base[:2] == (b"\x00", b"\x01")
+    assert base[-2:] == (b"", b"") and len(base) == 6
+    with pytest.raises(AttributeError):
+        base.append(b"x")  # a caller cannot poison later decodes
+
+
+def test_in_longs_rejects_null_and_fractional_ids(spark):
+    import numpy as np
+
+    from dataflow_python_etl_spark.operators.similarity import _in_longs
+
+    df = spark.range(6)
+    keep = df.where(_in_longs("id", [1, 3.0, np.int64(5)]))
+    assert sorted(r["id"] for r in keep.collect()) == [1, 3, 5]
+    for bad in (None, 3.7, float("nan"), "4"):
+        with pytest.raises(ValueError, match="non-null integral ids"):
+            _in_longs("id", [1, bad])

@@ -583,50 +583,6 @@ def test_streaming_hll_parity(spark, event_drop):
     assert got == want and len(got) > 0
 
 
-def test_stream_scd2_matches_batch_and_replay_noop(spark, tmp_path):
-    """Streamed SCD2 maintenance across a micro-batch boundary equals
-    one batch scd2_intervals over all events; re-delivering already-
-    applied rows (a replayed batch) leaves the table unchanged."""
-    from pyspark.sql import functions as F
-
-    from dataflow_python_etl_spark.operators.events import scd2_intervals
-    from dataflow_python_etl_spark.streaming.pipeline import (
-        read_event_stream,
-        stream_scd2_to_table,
-    )
-
-    ev = read_table(spark, SF_DIR, "events").select(
-        "event_id", "ts", "user_id", "event_type", "value", "props"
-    )
-    src = str(tmp_path / "in")
-    table = str(tmp_path / "scd2")
-    ckpt = str(tmp_path / "ckpt")
-    cutoff = "2024-01-15"
-    ev.where(F.col("ts") < cutoff).coalesce(1).write.parquet(src)
-    q = stream_scd2_to_table(read_event_stream(spark, src), table, ckpt)
-    q.processAllAvailable()
-    ev.where(F.col("ts") >= cutoff).coalesce(1).write.mode("append").parquet(src)
-    q.processAllAvailable()
-    q.stop()
-
-    def snap(df):
-        return sorted(
-            (r["user_id"], r["value"], r["valid_from"], r["valid_to"], r["is_current"])
-            for r in df.collect()
-        )
-
-    want = snap(scd2_intervals(ev))
-    got = snap(spark.read.parquet(table))
-    assert got == want and len(want) > 0
-
-    # replay: the same late-window rows re-delivered as a new batch
-    ev.where(F.col("ts") >= cutoff).coalesce(1).write.mode("append").parquet(src)
-    q = stream_scd2_to_table(read_event_stream(spark, src), table, ckpt)
-    q.processAllAvailable()
-    q.stop()
-    assert snap(spark.read.parquet(table)) == want
-
-
 def test_stream_stream_conversion_join_matches_batch(spark, event_drop):
     """The stream-stream inner join (watermarked both sides, time-
     bounded condition) must emit exactly the batch twin's pairs —
@@ -666,34 +622,6 @@ def test_stream_stream_conversion_join_guard():
 
     with pytest.raises(ValueError, match="window_minutes"):
         conversion_join(None, window_minutes=0)
-
-
-def test_streaming_m4_matches_batch(spark, event_drop):
-    """m4_stream is ONE declarative windowed agg (min_by/max_by on
-    (ts, id)), so the streaming planner runs it with per-(series,
-    bucket) state and the drained stream must equal the SAME function
-    on the batch frame — no custom stateful operator."""
-    from dataflow_python_etl_spark.streaming.pipeline import (
-        m4_stream,
-        read_event_stream,
-        run_to_memory_sink,
-    )
-
-    stream = read_event_stream(spark, event_drop)
-    out = m4_stream(stream)
-    assert out.isStreaming
-    run_to_memory_sink(out, "m4_live")
-
-    def key(rows):
-        return {
-            (r["bucket_start"], r["series"]):
-            (r["n"], r["v_first"], r["v_min"], r["v_max"], r["v_last"])
-            for r in rows
-        }
-
-    got = key(spark.table("m4_live").collect())
-    want = key(m4_stream(read_table(spark, SF_DIR, "events")).collect())
-    assert got == want and len(want) > 0
 
 
 def test_stream_dedup_ingest_dsir_gate(spark, tmp_path):

@@ -7,6 +7,7 @@ from __future__ import annotations
 import time
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from dataflow_python_etl_spark.operators.codecs import encode_png
@@ -80,53 +81,74 @@ def test_stream_image_dedup_ingest_online_filtering(spark, tmp_path):
     assert set(idx.columns) == {"image_id", "phash"}
 
 
+def _lost_artifact_case(kind):
+    """(sink, id column, source DDL, rows(spark, *(id, key))) for the
+    lost-artifact test; keys "a"/"b" are two unrelated items and
+    "a~"/"b~" a near-dup of each (brightness shift / re-muxed frames)."""
+    from dataflow_python_etl_spark.operators.codecs import encode_gif
+    from dataflow_python_etl_spark.streaming.pipeline import (
+        stream_video_dedup_ingest,
+    )
+
+    if kind == "image":
+        a, b = _img(21), _img(22)
+        items = {"a": a, "a~": a + 5, "b": b, "b~": b + 5}
+        enc, sink, id_col = encode_png, stream_image_dedup_ingest, "image_id"
+    else:
+        a, b = _frames(81), _frames(82)
+        items = {"a": a, "a~": a[::-1], "b": b, "b~": b[::-1]}
+        enc, sink, id_col = encode_gif, stream_video_dedup_ingest, "video_id"
+    ddl = f"{id_col} long, payload binary"
+
+    def rows(spark, *pairs):
+        data = [(i, bytearray(enc(items[k]))) for i, k in pairs]
+        return spark.createDataFrame(data, ddl)
+
+    return sink, id_col, ddl, rows
+
+
+@pytest.mark.parametrize("kind", ["image", "video"])
 def test_stream_image_ingest_lost_index_rebuilt_and_missing_corpus_refused(
-    spark, tmp_path
+    spark, tmp_path, kind
 ):
     """A lost index is rebuilt FROM the corpus before use (a partial
     index would blind later batches); a lost CORPUS with surviving
-    artifacts fails loudly instead of rebuilding from one batch."""
+    artifacts fails loudly instead of rebuilding from one batch —
+    for the image (phash) and video (set-fingerprint) sinks alike."""
     import shutil
 
-    a, b = _img(21), _img(22)
+    sink, id_col, ddl, rows = _lost_artifact_case(kind)
     src = str(tmp_path / "in")
     corpus = str(tmp_path / "corpus")
     index = str(tmp_path / "index")
 
-    _rows(spark, (1, a)).coalesce(1).write.parquet(src)
-    q = stream_image_dedup_ingest(
-        spark.readStream.schema("image_id long, payload binary").parquet(src),
-        corpus,
-        index,
-        str(tmp_path / "ckpt1"),
-    )
+    def start():
+        return sink(
+            spark.readStream.schema(ddl).parquet(src),
+            corpus,
+            index,
+            str(tmp_path / "ckpt1"),
+        )
+
+    rows(spark, (1, "a")).coalesce(1).write.parquet(src)
+    q = start()
     q.processAllAvailable()
     q.stop()
 
-    # index vanishes; the next batch must still see image 1 as a dup
+    # index vanishes; the next batch must still see item 1 as a dup
     shutil.rmtree(index)
-    _rows(spark, (2, a + 5), (3, b)).coalesce(1).write.mode("append").parquet(src)
-    q = stream_image_dedup_ingest(
-        spark.readStream.schema("image_id long, payload binary").parquet(src),
-        corpus,
-        index,
-        str(tmp_path / "ckpt1"),
-    )
+    rows(spark, (2, "a~"), (3, "b")).coalesce(1).write.mode("append").parquet(src)
+    q = start()
     q.processAllAvailable()
     q.stop()
-    assert _poll_ids(spark, corpus, [1, 3]) == [1, 3]
+    assert _poll_ids(spark, corpus, [1, 3], id_col=id_col) == [1, 3]
     # rebuilt index covers the full corpus, not just the last batch
-    assert {r["image_id"] for r in spark.read.parquet(index).collect()} == {1, 3}
+    assert {r[id_col] for r in spark.read.parquet(index).collect()} == {1, 3}
 
     # corpus vanishes; restart must refuse
     shutil.rmtree(corpus)
-    _rows(spark, (4, b + 5)).coalesce(1).write.mode("append").parquet(src)
-    q = stream_image_dedup_ingest(
-        spark.readStream.schema("image_id long, payload binary").parquet(src),
-        corpus,
-        index,
-        str(tmp_path / "ckpt1"),
-    )
+    rows(spark, (4, "b~")).coalesce(1).write.mode("append").parquet(src)
+    q = start()
     try:
         q.processAllAvailable()
         raise AssertionError("expected the restarted sink to fail")
