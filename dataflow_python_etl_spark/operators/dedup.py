@@ -379,22 +379,19 @@ def minhash_signatures(
     # _hash_family is prefix-stable in count (one RNG stream), so any
     # num_perm yields the same leading pairs as MINHASH_AB.
     family = MINHASH_AB if num_perm <= 32 else _hash_family(num_perm, seed=1203)
-    # ONE parsed SQL expression per permutation (optimization r12):
-    # the Column-API spelling cost ~8 py4j round-trips per permutation
-    # per plan build; integer literal typing (INT vs BIGINT) and the
-    # long promotion are identical in the parser, so the Catalyst tree
-    # and every signature value are unchanged.
-    mins = [
-        F.expr(f"min((bh * {a} + {b}) % {P_MOD})").alias(f"h{i}")
-        for i, (a, b) in enumerate(family[:num_perm])
-    ]
-    return (
-        hashed.groupBy("doc")
-        .agg(*mins)
-        .select(
-            F.col("doc").alias(id_col),
-            F.array(*[F.col(f"h{i}") for i in range(num_perm)]).alias("signature"),
-        )
+    # ONE parsed SQL expression for the whole signature: the
+    # Column-API spelling cost ~8 py4j round-trips per permutation per
+    # plan build, and num_perm aliased aggregates + F.array still cost
+    # ~3 per permutation. Integer literal typing (INT vs BIGINT) and
+    # the long promotion are identical in the parser, and the array of
+    # aggregates plans as the same num_perm native min() aggregates
+    # under one projection, so every signature value and the
+    # array<bigint> type are unchanged.
+    mins_sql = ", ".join(
+        f"min((bh * {a} + {b}) % {P_MOD})" for a, b in family[:num_perm]
+    )
+    return hashed.groupBy(F.col("doc").alias(id_col)).agg(
+        F.expr(f"array({mins_sql})").alias("signature")
     )
 
 
@@ -937,6 +934,25 @@ def minhash_lsh_pairs_incremental(
             rows_per_band,
         )
     )
+    return _lsh_pairs_incremental(
+        corpus, new_docs, new_bands, index, id_col, text_col, n, threshold
+    )
+
+
+def _lsh_pairs_incremental(
+    corpus: DataFrame,
+    new_docs: DataFrame,
+    new_bands: DataFrame,
+    index: DataFrame,
+    id_col: str,
+    text_col: str,
+    n: int,
+    threshold: float,
+) -> DataFrame:
+    """:func:`minhash_lsh_pairs_incremental` over the batch's band rows
+    ``new_bands`` ((doc, band, sig), cached by the caller, who may
+    reuse them — the streaming sink appends the survivors' rows to the
+    index from the same cache instead of re-signing the survivors)."""
     nb = new_bands.alias("nb")
     ix = index.alias("ix")
     # new-vs-corpus: probe the stored index. A corpus doc can also
@@ -957,10 +973,14 @@ def minhash_lsh_pairs_incremental(
         & (F.col("nb.sig") == F.col("b2.sig"))
         & (F.col("nb.doc") < F.col("b2.doc")),
     ).select(F.col("nb.doc").alias("doc_a"), F.col("b2.doc").alias("doc_b"))
-    # same no-distinct rationale as minhash_lsh_pairs: semi-join
-    # consumers ignore the ≤ num_bands-fold duplicates (and replayed
-    # index rows only repeat existing candidates — also ignored)
-    candidates = _persist(cand_old.union(cand_new))
+    # UNLIKE minhash_lsh_pairs, distinct: the probe's candidate set is
+    # batch-sized (the ≤ num_bands-fold band repeats and replayed index
+    # rows only repeat pairs), and the distinct's shuffle is the
+    # boundary AQE coalesces the cache at — without it the cache keeps
+    # the index scan's bucket width plus the batch join's partitions,
+    # and _verify_jaccard's `needed` union doubles that. Semantically a
+    # no-op: every consumer is a left_semi join or that union.
+    candidates = _persist(cand_old.union(cand_new).distinct())
     all_docs = corpus.select(id_col, text_col).union(new_docs.select(id_col, text_col))
     # dedup_ids: tolerate a crash-replayed batch already present in the
     # corpus (same id on both sides of the union) — see _verify_jaccard.

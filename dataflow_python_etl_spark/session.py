@@ -22,10 +22,20 @@ from pyspark.sql import SparkSession
 #    batches, not pickled rows.
 #  - maxPartitionBytes 128m: keeps scan partitions memory-friendly and
 #    numerous enough to saturate a large cluster.
+#  - AQE inside cached plans: Spark's default
+#    (canChangeCachedPlanOutputPartitioning=false) runs every
+#    persist()/register_cache frame with AQE OFF, so a cache keeps the
+#    static shuffle.partitions width (32) however few rows it holds,
+#    and every consumer of it pays that width again. Allowing AQE to
+#    coalesce a cached plan sizes the cache to its data (a 400-doc
+#    stream batch's band cache becomes 1 partition, not 32); the price
+#    is that a consumer can no longer rely on the cache's hash
+#    partitioning and may add an Exchange to read it.
 _DEFAULTS: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
     # Runtime bloom-filter join pruning: the build side's keys filter
     # the probe side's SCAN before the shuffle — at 100 TB this is the
     # difference between shuffling a fact table and shuffling the ~1%

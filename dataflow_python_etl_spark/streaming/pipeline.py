@@ -397,6 +397,8 @@ def _ingest_single_row(
     import json
     import os
 
+    from pyspark.sql import Observation
+
     from dataflow_python_etl_spark.operators.dedup import unpersist_all
 
     if replay_guard not in ("anti_join", "watermark"):
@@ -452,11 +454,17 @@ def _ingest_single_row(
                 .select(F.col("doc_a").alias(id_col))
             )
             removals = b_new.union(a_new_b_corpus).distinct()
+        # watermark: the highest id this batch DECIDED (survivor or dup
+        # — a dropped dup is a decision too; re-admitting it later would
+        # flip it), observed on the survivor checkpoint's own job
+        obs = Observation() if replay_guard == "watermark" else None
+        decided = batch if obs is None else batch.observe(obs, F.max(id_col).alias("max_id"))
+        # materialize before the appends so both writes see one
+        # consistent survivor set (and the probe caches can be freed)
+        survivors = decided.join(removals, id_col, "left_anti").localCheckpoint(eager=True)
         max_ingested = None
-        if replay_guard == "watermark":
-            # highest id this batch DECIDED (survivor or dup — a dropped
-            # dup is a decision too; re-admitting it later would flip it)
-            max_ingested = batch.agg(F.max(id_col)).first()[0]
+        if obs is not None:
+            max_ingested = obs.get["max_id"]
             if max_ingested is None:
                 # every id already covered by the watermark (source-level
                 # replay): record completion, touch nothing else. An
@@ -466,9 +474,6 @@ def _ingest_single_row(
                     _write_wm(batch_id, wm["max_id"])
                 unpersist_all()  # probe caches registered before the filter emptied
                 return
-        # materialize before the appends so both writes see one
-        # consistent survivor set (and the probe caches can be freed)
-        survivors = batch.join(removals, id_col, "left_anti").localCheckpoint(eager=True)
         append_index(survivors)
         if replay_guard == "watermark":
             (
@@ -523,8 +528,10 @@ def stream_dedup_ingest(
     The EXPENSIVE work per batch scales with the BATCH: signatures
     are computed for batch docs only, and verification re-shingles
     only HIT corpus docs (semi-join-pruned) — the corpus is never
-    re-signed. Two knobs remove the remaining corpus-sized per-batch
-    costs:
+    re-signed. The batch's band rows are derived ONCE per batch and
+    cached: the same rows probe the index and, semi-joined with the
+    survivors, are appended to it (survivors are never re-signed).
+    Two knobs remove the remaining corpus-sized per-batch costs:
 
     - ``index_table``: persist the band index as a catalog table
       BUCKETED by (band, sig)
@@ -573,11 +580,10 @@ def stream_dedup_ingest(
     Crash safety and the restart/replay guards are the shared
     :func:`_ingest_single_row` contract. Text specifics: duplicate
     index rows from a crash between index and corpus appends are
-    harmless because candidates are aggregated per pair in the
-    posting-list join (``_posting_common``'s pair groupBy) and every
-    downstream consumer reaches the corpus via semi-joins, which are
-    idempotent under duplicate probe rows (no bare ``distinct`` is
-    needed, and since round 4 none exists on this path); a replay
+    harmless because they only repeat candidate pairs, which the
+    probe's candidate ``distinct`` collapses (and every downstream
+    consumer reaches the corpus via semi-joins, idempotent under
+    duplicate probe rows anyway); a replay
     against a corpus that already holds the batch converges because
     the verification de-duplicates ids (see
     ``_verify_jaccard(dedup_ids=True)``).
@@ -587,8 +593,9 @@ def stream_dedup_ingest(
     from dataflow_python_etl_spark.operators.dedup import (
         BandIndexStore,
         _band_frame,
+        _lsh_pairs_incremental,
+        _persist,
         minhash_lsh_pairs,
-        minhash_lsh_pairs_incremental,
         minhash_signatures,
     )
 
@@ -701,8 +708,14 @@ def stream_dedup_ingest(
             bands.write.parquet(index_path)
 
     def probe(spark: SparkSession, batch: DataFrame, corpus: DataFrame | None):
+        # the batch's band rows, derived ONCE: they feed the index probe
+        # and, semi-joined with the survivors, the index append
+        new_bands = _persist(_bands(batch))
+
         def append_index(survivors: DataFrame) -> None:
-            bands = _bands(survivors)
+            bands = new_bands.join(
+                survivors.select(F.col(id_col).alias("doc")), "doc", "left_semi"
+            )
             st = _store(spark)
             if st is not None:
                 st.append(bands)
@@ -716,8 +729,8 @@ def stream_dedup_ingest(
             return pairs, append_index
         st = _store(spark)
         index = st.read() if st is not None else spark.read.parquet(index_path)
-        pairs = minhash_lsh_pairs_incremental(
-            corpus, batch, index, id_col, text_col, n, num_perm, rows_per_band, threshold
+        pairs = _lsh_pairs_incremental(
+            corpus, batch, new_bands, index, id_col, text_col, n, threshold
         )
         return pairs, append_index
 
@@ -853,6 +866,29 @@ def stream_video_dedup_ingest(
     rebuilt FROM the corpus (one re-decode), and duplicate index rows
     from a crash between the index and corpus appends are absorbed by
     the probe's match-level ``distinct``."""
+    return _set_fingerprint_ingest(
+        "stream_video_dedup_ingest", stream_videos, corpus_path, index_path,
+        checkpoint, id_col, payload_col, min_score_ppm, replay_guard, hash_fn,
+        metric, multiset,
+    )
+
+
+def _set_fingerprint_ingest(
+    kind: str,
+    stream: DataFrame,
+    corpus_path: str,
+    index_path: str,
+    checkpoint: str,
+    id_col: str,
+    payload_col: str,
+    min_score_ppm: int,
+    replay_guard: str,
+    hash_fn,
+    metric: str,
+    multiset: bool,
+) -> "pyspark.sql.streaming.StreamingQuery":  # noqa: F821
+    """:func:`stream_video_dedup_ingest` under the calling sink's name
+    ``kind``, which the restart refusal reports."""
     import os
 
     from pyspark.sql import Window
@@ -900,8 +936,7 @@ def stream_video_dedup_ingest(
         return pairs.withColumnsRenamed({"id_a": "doc_a", "id_b": "doc_b"}), append_index
 
     return _ingest_single_row(
-        stream_videos, "stream_video_dedup_ingest", corpus_path, checkpoint,
-        id_col, payload_col, replay_guard,
+        stream, kind, corpus_path, checkpoint, id_col, payload_col, replay_guard,
         lambda spark: os.path.exists(index_path),
         lambda spark, corpus: _counts(_raw(corpus)).write.parquet(index_path),
         probe,
@@ -1136,18 +1171,10 @@ def stream_text_containment_ingest(
     def kernel(df: DataFrame, i: str, p: str) -> DataFrame:
         return text_shingle_hashes(df, i, p, n=n)
 
-    return stream_video_dedup_ingest(
-        stream_docs,
-        corpus_path,
-        index_path,
-        checkpoint,
-        id_col=id_col,
-        payload_col=text_col,
-        min_score_ppm=min_containment_ppm,
-        replay_guard=replay_guard,
-        hash_fn=kernel,
-        metric="containment",
-        multiset=False,
+    return _set_fingerprint_ingest(
+        "stream_text_containment_ingest", stream_docs, corpus_path, index_path,
+        checkpoint, id_col, text_col, min_containment_ppm, replay_guard, kernel,
+        "containment", False,
     )
 
 

@@ -157,6 +157,87 @@ def test_stream_dedup_ingest_with_bucketed_index(spark, tmp_path):
     store.drop()
 
 
+def test_stream_index_rows_equal_batch_band_index(spark, tmp_path):
+    """The sink appends each batch's survivors' band rows from the
+    batch's ONE band derivation (the probe's cache, semi-joined with
+    the survivors): after two batches the bucketed index holds exactly
+    ``minhash_band_index(corpus)``, row for row, as a multiset."""
+    from collections import Counter
+
+    from dataflow_python_etl_spark.streaming.pipeline import stream_dedup_ingest
+
+    src = str(tmp_path / "in")
+    corpus = str(tmp_path / "corpus")
+    index = str(tmp_path / "index")
+    _docs(spark, [(1, TEXTS["a"]), (2, TEXTS["a"]), (3, TEXTS["b"])]).write.parquet(src)
+    q = stream_dedup_ingest(
+        spark.readStream.schema("doc_id long, text string").parquet(src),
+        corpus,
+        index,
+        str(tmp_path / "ckpt"),
+        index_table="t_bix_rows",
+        index_buckets=4,
+    )
+    q.processAllAvailable()
+    _docs(
+        spark, [(11, TEXTS["b"] + " again"), (12, TEXTS["c"]), (13, TEXTS["d"])]
+    ).write.mode("append").parquet(src)
+    q.processAllAvailable()
+    q.stop()
+    store = BandIndexStore(spark, "t_bix_rows", path=index, n_buckets=4)
+    rows = lambda df: Counter(tuple(r) for r in df.select("doc", "band", "sig").collect())  # noqa: E731
+    got = rows(store.read())
+    want = rows(minhash_band_index(spark.read.parquet(corpus)))
+    store.drop()
+    assert {d for d, _, _ in want} == {1, 3, 12, 13}
+    assert got == want
+
+
+def test_registered_cache_coalesces_to_its_data(spark):
+    """Engine-session premise of the batch-sized stream probe: AQE may
+    coalesce a cached plan (canChangeCachedPlanOutputPartitioning), so
+    a tiny aggregated cache holds ONE partition, not the 32 of
+    spark.sql.shuffle.partitions that every consumer would re-pay."""
+    from dataflow_python_etl_spark.operators.dedup import register_cache
+
+    tiny = register_cache(
+        spark.range(100).groupBy((F.col("id") % 5).alias("k")).count()
+    )
+    assert tiny.count() == 5
+    assert tiny.rdd.getNumPartitions() == 1
+    unpersist_all()
+
+
+def test_minhash_signatures_equal_per_permutation_form(spark):
+    """The single parsed ``array(min(...), ...)`` signature equals the
+    former spelling — one aliased ``min`` aggregate per permutation,
+    packed by ``F.array`` — value for value, as ``array<bigint>``."""
+    from dataflow_python_etl_spark.functions.text import md5_hash60, shingles
+    from dataflow_python_etl_spark.operators.dedup import MINHASH_AB, P_MOD
+
+    docs = _docs(spark, [(i, t) for i, t in enumerate(TEXTS.values())] + [(9, "too short")])
+    hashed = docs.select(
+        F.col("doc_id").alias("doc"), F.explode(shingles("text", 3)).alias("shingle")
+    ).select("doc", (md5_hash60(F.col("shingle")) % P_MOD).alias("bh"))
+    old = (
+        hashed.groupBy("doc")
+        .agg(*[
+            F.expr(f"min((bh * {a} + {b}) % {P_MOD})").alias(f"h{i}")
+            for i, (a, b) in enumerate(MINHASH_AB)
+        ])
+        .select(
+            F.col("doc").alias("doc_id"),
+            F.array(*[F.col(f"h{i}") for i in range(32)]).alias("signature"),
+        )
+    )
+    new = minhash_signatures(docs, "doc_id", "text", 3, 32)
+    assert new.schema == old.schema
+    assert new.schema["signature"].dataType.simpleString() == "array<bigint>"
+    got = {r["doc_id"]: r["signature"] for r in new.collect()}
+    assert len(got) == 4  # the 2-word doc has no 3-gram shingles
+    assert got == {r["doc_id"]: r["signature"] for r in old.collect()}
+
+
 def test_stream_restart_rebuilds_vanished_bucketed_index(spark, tmp_path):
     """Poisoned-index guard, bucketed flavor: if the index table/files
     vanish, a restarted sink rebuilds the FULL corpus index (not just

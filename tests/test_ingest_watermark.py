@@ -262,6 +262,32 @@ def test_watermark_empty_first_batch(spark, tmp_path):
     assert _corpus_ids(spark, corpus) == [1]
 
 
+def test_watermark_fully_covered_batch_touches_nothing(spark, tmp_path):
+    """A NEW batch whose ids are all at or under the watermark (a
+    source-level replay) records its completion and writes nothing
+    else: the watermark moves to its batch id with the same max_id,
+    and the corpus partitions and index files stay as they were."""
+    src = str(tmp_path / "in")
+    corpus = str(tmp_path / "corpus")
+    index = str(tmp_path / "index")
+    ckpt = str(tmp_path / "ckpt")
+    wm_path = corpus + ".__ingest_watermark"
+    _docs(spark, [(1, TEXTS["a"]), (2, TEXTS["b"])]).coalesce(1).write.parquet(src)
+    _run_once(spark, src, corpus, index, ckpt)
+    assert json.load(open(wm_path)) == {"batch_id": 0, "max_id": 2}
+    index_files = sorted(os.listdir(index))
+    _docs(spark, [(1, TEXTS["a"]), (2, TEXTS["c"])]).coalesce(1).write.mode(
+        "append"
+    ).parquet(src)
+    _run_once(spark, src, corpus, index, ckpt)
+    assert json.load(open(wm_path)) == {"batch_id": 1, "max_id": 2}
+    assert sorted(d for d in os.listdir(corpus) if d.startswith("ingest_batch=")) == [
+        "ingest_batch=0"
+    ]
+    assert sorted(os.listdir(index)) == index_files
+    assert _corpus_ids(spark, corpus) == [1, 2]
+
+
 def test_watermark_and_bucketed_index_compose(spark, tmp_path):
     """The full 100 TB configuration: bucketed (band, sig) index table
     AND the monotone-id watermark guard together — same survivor set

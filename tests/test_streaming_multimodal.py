@@ -595,3 +595,43 @@ def test_stream_text_containment_ingest_online_filtering(spark, tmp_path):
     assert set(idx.columns) == {"doc_id", "set_hash", "c", "n"}
     # distinct-shingle kernel: every multiplicity is 1
     assert all(r["c"] == 1 for r in idx.collect())
+
+
+def test_stream_text_containment_restart_refusal_names_its_sink(spark, tmp_path):
+    """The containment sink shares the video sink's set-fingerprint
+    code, but a restart over a lost corpus must name the sink the
+    caller started."""
+    import shutil
+
+    from dataflow_python_etl_spark.streaming.pipeline import (
+        stream_text_containment_ingest,
+    )
+
+    src = str(tmp_path / "docs_in")
+    corpus = str(tmp_path / "corpus")
+
+    def _drows(*pairs):
+        return spark.createDataFrame(
+            [(i, " ".join(w)) for i, w in pairs], "doc_id: long, text: string"
+        )
+
+    def start():
+        return stream_text_containment_ingest(
+            spark.readStream.schema("doc_id long, text string").parquet(src),
+            corpus,
+            str(tmp_path / "index"),
+            str(tmp_path / "ckpt"),
+        )
+
+    _drows((1, _words(71, 60))).coalesce(1).write.parquet(src)
+    q = start()
+    q.processAllAvailable()
+    q.stop()
+    shutil.rmtree(corpus)
+    _drows((2, _words(72, 60))).coalesce(1).write.mode("append").parquet(src)
+    q = start()
+    try:
+        with pytest.raises(Exception, match="stream_text_containment_ingest restart at batch"):
+            q.processAllAvailable()
+    finally:
+        q.stop()
