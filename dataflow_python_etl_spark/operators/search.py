@@ -104,29 +104,19 @@ def _term_bucket_py(term: str, n_buckets: int) -> int:
     return int(hashlib.md5(term.encode("utf-8")).hexdigest()[:15], 16) % n_buckets
 
 
-def _write_search_stats(path: str, stats: dict) -> None:
-    import json
-    import os
-
-    tmp = os.path.join(path, SEARCH_STATS + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump(stats, f)
-    os.replace(tmp, os.path.join(path, SEARCH_STATS))
-
-
 def load_search_stats(path: str) -> dict:
-    import json
     import os
 
-    sidecar = os.path.join(path, SEARCH_STATS)
-    if not os.path.exists(sidecar):
+    from dataflow_python_etl_spark.operators.upsert import _read_marker
+
+    stats = _read_marker(os.path.join(path, SEARCH_STATS))
+    if stats is None:
         raise ValueError(
             f"search index at {path} has no {SEARCH_STATS} sidecar — not built "
             "by build_search_index, or the sidecar was lost; rebuild the index "
             "(BM25 needs the exact corpus-level (n_docs, sum_dl))"
         )
-    with open(sidecar) as f:
-        return json.load(f)
+    return stats
 
 
 def build_search_index(
@@ -177,9 +167,12 @@ def build_search_index(
         "w", "doc_id", "tf", "dl",
         F.pmod(md5_hash60(F.col("w")), F.lit(n_buckets)).cast("int").alias("pbucket"),
     )
+    from dataflow_python_etl_spark.operators.upsert import _write_marker
+
     postings.write.partitionBy("pbucket").parquet(path)
-    _write_search_stats(
-        path, {"n_docs": s["n"], "sum_dl": int(s["s"]), "n_buckets": n_buckets}
+    _write_marker(
+        os.path.join(path, SEARCH_STATS),
+        {"n_docs": s["n"], "sum_dl": int(s["s"]), "n_buckets": n_buckets},
     )
 
 
@@ -252,6 +245,8 @@ def append_to_search_index(
     slightly-stale (n_docs, sum_dl) — self-healing on the next
     successful append, or recompute exactly by rebuilding; postings
     themselves are never torn."""
+    import os
+
     from dataflow_python_etl_spark.functions.text import md5_hash60, tokens
 
     stats = load_search_stats(path)
@@ -271,6 +266,7 @@ def append_to_search_index(
         F.pmod(md5_hash60(F.col("w")), F.lit(n_buckets)).cast("int").alias("pbucket"),
     )
     from dataflow_python_etl_spark.operators.upsert import (
+        _write_marker,
         staged_partition_append,
     )
 
@@ -278,8 +274,8 @@ def append_to_search_index(
     s = lens.agg(
         F.count(F.lit(1)).alias("n"), F.coalesce(F.sum("dl"), F.lit(0)).alias("s")
     ).first()
-    _write_search_stats(
-        path,
+    _write_marker(
+        os.path.join(path, SEARCH_STATS),
         {
             "n_docs": stats["n_docs"] + s["n"],
             "sum_dl": stats["sum_dl"] + int(s["s"]),

@@ -678,33 +678,23 @@ def _pq_reconstruct(
     return F.expr(f"flatten(array({parts}))")
 
 
-def _write_pq_sidecar(path: str, codebooks: list[list[list[float]]]) -> None:
-    import json
-    import os
-
-    tmp = os.path.join(path, PQ_SIDECAR + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump(codebooks, f)
-    os.replace(tmp, os.path.join(path, PQ_SIDECAR))
-
-
 def load_pq_codebooks(path: str) -> list[list[list[float]]]:
     """Read the codebook sidecar a ``quantize='pq'`` build wrote into
     the index dir (named with a ``_`` prefix, so corpus scans never
     see it). Loud if absent — a PQ index without its codebooks is
     undecodable."""
-    import json
     import os
 
-    sidecar = os.path.join(path, PQ_SIDECAR)
-    if not os.path.exists(sidecar):
+    from dataflow_python_etl_spark.operators.upsert import _read_marker
+
+    codebooks = _read_marker(os.path.join(path, PQ_SIDECAR))
+    if codebooks is None:
         raise ValueError(
             f"PQ index at {path} has no {PQ_SIDECAR} sidecar — it was not "
             "built by build_ivf_index(quantize='pq'), or the sidecar was lost "
             "(rebuild the index)"
         )
-    with open(sidecar) as f:
-        return json.load(f)
+    return codebooks
 
 
 def fit_pq_grid_codebooks(
@@ -964,18 +954,18 @@ def load_ivf_centroids(path: str) -> list[list[float]]:
     into the index dir. Loud if absent — an index without its
     centroids cannot be probed correctly (indexes built before the
     sidecar existed must be rebuilt once)."""
-    import json
     import os
 
-    sidecar = os.path.join(path, CENTROID_SIDECAR)
-    if not os.path.exists(sidecar):
+    from dataflow_python_etl_spark.operators.upsert import _read_marker
+
+    centroids = _read_marker(os.path.join(path, CENTROID_SIDECAR))
+    if centroids is None:
         raise ValueError(
             f"IVF index at {path} has no {CENTROID_SIDECAR} sidecar — it "
             "predates self-describing indexes or the sidecar was lost; "
             "rebuild with build_ivf_index (the sidecar rides the swap)"
         )
-    with open(sidecar) as f:
-        return json.load(f)
+    return centroids
 
 
 def rebalance_ivf_index(

@@ -12,6 +12,8 @@ becomes a real MERGE INTO; the operator's contract stays the same.
 
 from __future__ import annotations
 
+import json
+import os
 import shutil
 import uuid
 
@@ -29,8 +31,6 @@ def swap_table_dir(table_path: str, new_path: str) -> None:
     (Local-FS implementation; on HDFS/S3 this maps to rename /
     committed overwrite.)
     """
-    import os
-
     bak = f"{table_path}.__bak_{uuid.uuid4().hex[:8]}"
     shutil.move(table_path, bak)
     try:
@@ -79,8 +79,6 @@ def write_and_swap(
     Spark jobs (e.g. a ``_manifest`` parquet) — same atomicity
     contract as ``extra_files``, for content a plain string can't
     express."""
-    import os
-
     tmp = f"{table_path}.__tmp_{uuid.uuid4().hex[:8]}"
     w = df.write.mode("overwrite")
     for k, v in (options or {}).items():
@@ -118,7 +116,6 @@ def recover_table_dir(table_path: str) -> bool:
     Older backups (multiple crashes) are left for ``vacuum_table_dir``,
     which can collect them once the base table exists again."""
     import glob
-    import os
 
     if os.path.exists(table_path):
         return False
@@ -130,6 +127,83 @@ def recover_table_dir(table_path: str) -> bool:
         return False
     shutil.move(baks[-1], table_path)
     return True
+
+
+# ---------------------------------------------------------------------------
+# Batch markers: the small JSON records that turn foreachBatch's
+# at-least-once delivery into per-batch exactly-once. Every streaming
+# sink reads and commits its marker here. Watermark sinks keep
+# ``{"batch_id", "max_id"}`` beside their table; ledger sinks keep the
+# last applied batch id inside it (``AGG_LEDGER`` swapped WITH the
+# data via ``write_and_swap``'s ``extra_files``, or the search stats).
+# ---------------------------------------------------------------------------
+
+AGG_LEDGER = "_applied_batch.json"  # "_"-prefixed: Spark scans skip it
+
+
+def _read_marker(path: str):
+    """The JSON marker at ``path``, or None before its first commit."""
+    if not os.path.exists(path):
+        return None
+    with open(path) as f:
+        return json.load(f)
+
+
+def _write_marker(path: str, marker) -> None:
+    """Commit ``marker`` at ``path`` atomically (tmp + ``os.replace``):
+    a torn watermark would silently re-admit, or forever skip, ids on
+    the next restart."""
+    tmp = path + ".__tmp"
+    with open(tmp, "w") as f:
+        json.dump(marker, f)
+    os.replace(tmp, path)
+
+
+def _ledger_file(marker: dict) -> dict[str, str]:
+    """``marker`` as the ``extra_files`` entry that swaps it in WITH
+    the data it describes."""
+    return {AGG_LEDGER: json.dumps(marker)}
+
+
+def _batch_applied(sink: str, batch_id: int, recorded: int | None) -> bool:
+    """The ledger sinks' one replay rule. foreachBatch re-delivers only
+    the batch it last ran, so ``batch_id == recorded`` is a replay of a
+    fully applied batch: a no-op. ``batch_id < recorded`` means the
+    checkpoint was reset over a live table, and skipping would silently
+    drop every early batch, so it fails loudly."""
+    if recorded is None or batch_id > recorded:
+        return False
+    if batch_id == recorded:
+        return True
+    raise RuntimeError(
+        f"{sink}: batch {batch_id} arrived after batch {recorded} was "
+        "applied — the checkpoint was reset over a live table. Restore "
+        "the checkpoint, or rebuild the table under a fresh one."
+    )
+
+
+def _guard_missing_table(table_path: str, batch_id: int, sink: str) -> None:
+    """A missing table MUST NOT be silently treated as empty on a
+    restarted sink: if a previous run died inside ``swap_table_dir``'s
+    rename window, the only copy of the table lives in a ``.__bak_*``
+    sibling, and merging this batch into an "empty" table would drop
+    every prior row — and, with the base path recreated, a later
+    vacuum would collect the backup holding the only copy. Restore the
+    backup when one exists; if none does but the checkpoint says we've
+    applied batches before (batch_id > 0), fail loudly rather than
+    resurrect the table from one batch."""
+    if os.path.exists(table_path):
+        return
+    if recover_table_dir(table_path):
+        return  # crashed mid-swap; replaying this batch is idempotent
+    if batch_id > 0:
+        raise RuntimeError(
+            f"{sink} restart at batch {batch_id} but table "
+            f"{table_path} is missing and no .__bak_* backup exists — "
+            "refusing to rebuild the table from a single batch (prior "
+            "rows would be silently lost). Restore the table or start "
+            "a fresh checkpoint."
+        )
 
 
 def upsert_df(
@@ -482,7 +556,6 @@ def vacuum_table_dir(warehouse: str, older_than_s: float = 24 * 3600) -> list[st
     the only surviving copy of the table in the ``.__bak_*`` dir, and
     vacuuming it would destroy the table. Those are reported for
     manual restore instead. Returns the removed paths."""
-    import os
     import re
     import sys
     import time
@@ -566,17 +639,12 @@ def forget_keys(
     )
 
 
-AGG_LEDGER = "_applied_batch.json"  # "_"-prefixed: Spark scans skip it
-
-
 def _guard_erasure_stale(table_path: str, op: str) -> None:
     """Refuse to fold into an erasure-tombstoned MV: its sketch cells
     irreversibly contain a forgotten item's contribution, and every
     further fold would perpetuate it (see operators.erasure). Rebuild
     from the cleansed base via erasure.rebuild_mv, which clears the
     marker atomically with the fresh data."""
-    import os
-
     from dataflow_python_etl_spark.operators.erasure import ERASURE_TOMBSTONE
 
     if os.path.exists(os.path.join(table_path, ERASURE_TOMBSTONE)):
@@ -586,17 +654,6 @@ def _guard_erasure_stale(table_path: str, op: str) -> None:
             "rebuild from the cleansed base (erasure.rebuild_mv) before "
             "folding further batches."
         )
-
-
-def _read_agg_ledger(table_path: str):
-    import json
-    import os
-
-    p = os.path.join(table_path, AGG_LEDGER)
-    if not os.path.exists(p):
-        return None
-    with open(p) as f:
-        return json.load(f)["last_batch_id"]
 
 
 def refresh_additive_agg(
@@ -622,8 +679,9 @@ def refresh_additive_agg(
     batch double-counts), so callers with replayable inputs pass a
     monotonic ``batch_id`` — it is recorded in a ledger sidecar
     written ATOMICALLY with the folded data (write_and_swap
-    ``extra_files``), and a batch at or below the recorded id is a
-    loud no-op skip. foreachBatch is at-least-once: a crash after
+    ``extra_files``). The recorded batch is a silent no-op skip, and
+    a batch BELOW it raises (a checkpoint reset over a live table;
+    ``_batch_applied``). foreachBatch is at-least-once: a crash after
     the fold but before Spark's checkpoint commit re-delivers the
     same batch_id on restart, and the ledger — not the checkpoint —
     is what makes that replay a no-op. A pre-ledger table (built by
@@ -634,28 +692,21 @@ def refresh_additive_agg(
     protection. Schema must match the existing table exactly,
     names AND types (a silently-widened measure would truncate
     through the cast and drift the aggregate)."""
-    import json
-    import os
-
-    from pyspark.sql import functions as F
-
     if not key_cols:
         raise ValueError("refresh_additive_agg requires key_cols")
     missing = [k for k in key_cols if k not in batch_agg.columns]
     if missing:
         raise ValueError(f"key columns absent from batch: {missing}")
     _guard_erasure_stale(table_path, "refresh_additive_agg")
-    ledger = (
-        {AGG_LEDGER: json.dumps({"last_batch_id": batch_id})}
-        if batch_id is not None
-        else None
-    )
+    ledger = _ledger_file({"last_batch_id": batch_id}) if batch_id is not None else None
     if not os.path.exists(table_path):
         write_and_swap(batch_agg, table_path, extra_files=ledger)
         return
-    applied = _read_agg_ledger(table_path)
+    applied = (_read_marker(os.path.join(table_path, AGG_LEDGER)) or {}).get(
+        "last_batch_id"
+    )
     if batch_id is not None:
-        if applied is not None and batch_id <= applied:
+        if _batch_applied("refresh_additive_agg", batch_id, applied):
             return  # replayed batch: already folded in, skip
     elif applied is not None:
         # Ledgerless fold into a LEDGERED table: carry the existing
@@ -663,7 +714,7 @@ def refresh_additive_agg(
         # scratch, so omitting it here would silently erase replay
         # protection — a later streaming restart would find no ledger
         # and re-apply its last delivered batch (double-count).
-        ledger = {AGG_LEDGER: json.dumps({"last_batch_id": applied})}
+        ledger = _ledger_file({"last_batch_id": applied})
     cur = spark.read.parquet(table_path)
     cur_types = {f.name: f.dataType for f in cur.schema.fields}
     new_types = {f.name: f.dataType for f in batch_agg.schema.fields}
@@ -703,13 +754,8 @@ def stream_additive_agg_to_table(
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         # repo invariant: a restarted sink whose table vanished must
         # FAIL (or restore the mid-swap backup), never rebuild the
-        # aggregate from a single batch (function-level import — the
-        # streaming module imports this one)
-        from dataflow_python_etl_spark.streaming.pipeline import (
-            _guard_missing_table,
-        )
-
-        _guard_missing_table(table_path, batch_id)
+        # aggregate from a single batch
+        _guard_missing_table(table_path, batch_id, "stream_additive_agg_to_table")
         refresh_additive_agg(
             batch_df.sparkSession, table_path, agg_fn(batch_df), key_cols,
             batch_id=batch_id,
@@ -743,10 +789,6 @@ def staged_partition_append(
     REFUSES while a leftover stage dir exists, and the error says how
     to recover (finish moving the leftover files, or delete the stage
     dirs and rebuild)."""
-    import os
-    import shutil
-    import uuid
-
     leftovers = [d for d in os.listdir(path) if d.startswith(".__append_tmp_")]
     if leftovers:
         raise ValueError(
@@ -805,8 +847,6 @@ def refresh_kmv_agg(
     |aggregate| + |batch|, never the fact history; estimates are
     read off the arrays all-integer (``est ≈ (k−1)·(M div R_k)``).
     Writes go through ``write_and_swap`` (crash-safe, never torn)."""
-    import os
-
     if not key_cols:
         raise ValueError("refresh_kmv_agg requires key_cols")
     if "hashes" not in batch_sketch.columns:
@@ -871,11 +911,7 @@ def stream_kmv_agg_to_table(
     from dataflow_python_etl_spark.operators.sketches import kmv_sketches
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from dataflow_python_etl_spark.streaming.pipeline import (
-            _guard_missing_table,
-        )
-
-        _guard_missing_table(table_path, batch_id)
+        _guard_missing_table(table_path, batch_id, "stream_kmv_agg_to_table")
         refresh_kmv_agg(
             batch_df.sparkSession,
             table_path,
@@ -926,8 +962,6 @@ def compact_table(
     """
     import glob
     import math
-    import os
-    import shutil
 
     if target_file_bytes < 1:
         raise ValueError(f"target_file_bytes must be >= 1, got {target_file_bytes}")

@@ -153,14 +153,17 @@ def stream_upsert_to_table(
     idempotent by key), and reuses ALL batch operators — the streaming
     twin of the reference's truncate-reload sink, but incremental.
     """
-    from dataflow_python_etl_spark.operators.upsert import upsert_table
+    from dataflow_python_etl_spark.operators.upsert import (
+        _guard_missing_table,
+        upsert_table,
+    )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         import os
 
         spark = batch_df.sparkSession
         deduped = batch_df.dropDuplicates(key_cols)
-        _guard_missing_table(table_path, batch_id)
+        _guard_missing_table(table_path, batch_id, "stream_upsert_to_table")
         if not os.path.exists(table_path):
             deduped.write.parquet(table_path)
         else:
@@ -172,34 +175,6 @@ def stream_upsert_to_table(
         .outputMode("update")
         .start()
     )
-
-
-def _guard_missing_table(table_path: str, batch_id: int) -> None:
-    """A missing table MUST NOT be silently treated as empty on a
-    restarted sink: if a previous run died inside ``swap_table_dir``'s
-    rename window, the only copy of the table lives in a ``.__bak_*``
-    sibling, and merging this batch into an "empty" table would drop
-    every prior row — and, with the base path recreated, a later
-    vacuum would collect the backup holding the only copy. Restore the
-    backup when one exists; if none does but the checkpoint says we've
-    applied batches before (batch_id > 0), fail loudly rather than
-    resurrect the table from one batch."""
-    import os
-
-    from dataflow_python_etl_spark.operators.upsert import recover_table_dir
-
-    if os.path.exists(table_path):
-        return
-    if recover_table_dir(table_path):
-        return  # crashed mid-swap; replaying this batch is idempotent
-    if batch_id > 0:
-        raise RuntimeError(
-            f"streaming sink restart at batch {batch_id} but table "
-            f"{table_path} is missing and no .__bak_* backup exists — "
-            "refusing to rebuild the table from a single batch (prior "
-            "rows would be silently lost). Restore the table or start "
-            "a fresh checkpoint."
-        )
 
 
 def stream_cdc_to_table(
@@ -239,6 +214,7 @@ def stream_cdc_to_table(
     from pyspark.sql import functions as F
 
     from dataflow_python_etl_spark.operators.upsert import (
+        _guard_missing_table,
         merge_df,
         merge_table_transactional,
         write_and_swap,
@@ -291,7 +267,7 @@ def stream_cdc_to_table(
                 spark, table_path, batch_df, key_cols, **_clauses(data_cols)
             )
             return
-        _guard_missing_table(table_path, batch_id)
+        _guard_missing_table(table_path, batch_id, "stream_cdc_to_table")
         if os.path.exists(table_path):
             existing = spark.read.parquet(table_path)
         else:
@@ -394,24 +370,16 @@ def _ingest_single_row(
     AT-LEAST-once: every write here is per-key idempotent or
     partition-overwritten, never an additive fold. Ids must be unique
     across the stream's lifetime."""
-    import json
     import os
 
     from pyspark.sql import Observation
 
     from dataflow_python_etl_spark.operators.dedup import unpersist_all
+    from dataflow_python_etl_spark.operators.upsert import _read_marker, _write_marker
 
     if replay_guard not in ("anti_join", "watermark"):
         raise ValueError(f"replay_guard must be anti_join|watermark, got {replay_guard!r}")
     wm_path = corpus_path + ".__ingest_watermark"
-
-    def _write_wm(batch_id: int, max_id) -> None:
-        # tmp + atomic rename: a torn watermark would silently re-admit
-        # (or worse, permanently skip) ids on the next restart
-        tmp = wm_path + ".__tmp"
-        with open(tmp, "w") as f:
-            json.dump({"batch_id": batch_id, "max_id": max_id}, f)
-        os.replace(tmp, wm_path)
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -426,10 +394,7 @@ def _ingest_single_row(
                 f"{corpus_path} is missing — refusing to rebuild from a "
                 "single batch; restore the corpus or start a fresh checkpoint."
             )
-        wm = None
-        if replay_guard == "watermark" and os.path.exists(wm_path):
-            with open(wm_path) as f:
-                wm = json.load(f)
+        wm = _read_marker(wm_path) if replay_guard == "watermark" else None
         if wm is not None and batch_id == wm["batch_id"]:
             return  # this exact batch fully committed — replay is a no-op
         if gate is not None:
@@ -471,7 +436,7 @@ def _ingest_single_row(
                 # empty FIRST batch (wm is None) has no watermark to
                 # carry forward — skip the write rather than invent one.
                 if wm is not None:
-                    _write_wm(batch_id, wm["max_id"])
+                    _write_marker(wm_path, {"batch_id": batch_id, "max_id": wm["max_id"]})
                 unpersist_all()  # probe caches registered before the filter emptied
                 return
         append_index(survivors)
@@ -483,7 +448,7 @@ def _ingest_single_row(
                 .partitionBy("ingest_batch")
                 .parquet(corpus_path)
             )
-            _write_wm(batch_id, max_ingested)
+            _write_marker(wm_path, {"batch_id": batch_id, "max_id": max_ingested})
         else:
             survivors.write.mode("append").parquet(corpus_path)
         unpersist_all()
@@ -979,7 +944,6 @@ def apply_ivf_index_batch(
     is written before the first data batch and validated against the
     passed codebooks on every restart, so code/codebook drift is
     impossible."""
-    import json
     import os
 
     from dataflow_python_etl_spark.operators.similarity import (
@@ -989,10 +953,10 @@ def apply_ivf_index_batch(
         _index_quantize_mode,
         _quantize_int8,
         _quantize_pq,
-        _write_pq_sidecar,
         load_ivf_centroids,
         load_pq_codebooks,
     )
+    from dataflow_python_etl_spark.operators.upsert import _read_marker, _write_marker
 
     if quantize not in (None, "int8", "pq"):
         raise ValueError(f"quantize must be None|'int8'|'pq', got {quantize!r}")
@@ -1032,7 +996,7 @@ def apply_ivf_index_batch(
                 )
         else:
             os.makedirs(index_path, exist_ok=True)
-            _write_pq_sidecar(index_path, pq_codebooks)
+            _write_marker(sidecar, pq_codebooks)
     # centroid sidecar: same lifecycle — written before the first data
     # batch so the index is self-describing (ivf_topk_indexed with
     # centroids=None), validated on every restart because assigning
@@ -1048,17 +1012,12 @@ def apply_ivf_index_batch(
             )
     else:
         os.makedirs(index_path, exist_ok=True)
-        tmp = cent_sidecar + ".__tmp"
-        with open(tmp, "w") as f:
-            json.dump(centroids, f)
-        os.replace(tmp, cent_sidecar)
+        _write_marker(cent_sidecar, centroids)
 
     batch = batch_df.select(id_col, vec_col)
     wm_path = index_path + ".__ingest_watermark"
-    wm = None
-    if replay_guard == "watermark" and os.path.exists(wm_path):
-        with open(wm_path) as f:
-            wm = json.load(f)
+    wm = _read_marker(wm_path) if replay_guard == "watermark" else None
+    if wm is not None:
         if batch_id == wm["batch_id"]:
             return  # this exact batch fully committed — replay is a no-op
         batch = batch.where(F.col(id_col) > F.lit(wm["max_id"]))
@@ -1068,10 +1027,7 @@ def apply_ivf_index_batch(
         max_id = batch.agg(F.max(id_col)).first()[0]
         if max_id is None:  # nothing new this batch
             if wm is not None:
-                tmp = wm_path + ".__tmp"
-                with open(tmp, "w") as f:
-                    json.dump({"batch_id": batch_id, "max_id": wm["max_id"]}, f)
-                os.replace(tmp, wm_path)
+                _write_marker(wm_path, {"batch_id": batch_id, "max_id": wm["max_id"]})
             return
 
     assigned = _assigned(batch, centroids, id_col, vec_col)
@@ -1087,10 +1043,7 @@ def apply_ivf_index_batch(
         .parquet(index_path)
     )
     if replay_guard == "watermark":
-        tmp = wm_path + ".__tmp"
-        with open(tmp, "w") as f:
-            json.dump({"batch_id": batch_id, "max_id": max_id}, f)
-        os.replace(tmp, wm_path)
+        _write_marker(wm_path, {"batch_id": batch_id, "max_id": max_id})
 
 
 def stream_embeddings_to_ivf_index(
@@ -1291,7 +1244,9 @@ def _apply_chunked_batch(
       ledger INSIDE the swap (the refresh_additive_agg pattern), and
       this swap happens LAST, so a crash anywhere earlier replays into
       identical partition overwrites, and a replay after the swap is a
-      recorded no-op.
+      recorded no-op. A kill between the swap's two renames leaves the
+      state only in its ``.__bak_*``; it is restored before the ledger
+      is read, so the replay never starts from an empty carry state.
 
     Decision rule: a clip that FINISHES this batch is dropped iff its
     hash set (multiset if ``codec.multiset``) scores ≥ ``min_ppm``
@@ -1310,20 +1265,24 @@ def _apply_chunked_batch(
     inputs (partition-pruned scan). Earlier partitions are NOT
     excluded by id: a clip id finishing a second time matches its own
     earlier index rows."""
-    import json
     import os
 
     import pandas as pd
 
-    from dataflow_python_etl_spark.operators.upsert import write_and_swap
+    from dataflow_python_etl_spark.operators.upsert import (
+        AGG_LEDGER,
+        _batch_applied,
+        _ledger_file,
+        _read_marker,
+        recover_table_dir,
+        write_and_swap,
+    )
 
     spark = batch_df.sparkSession
-    ledger_path = os.path.join(state_path, "_applied_batch.json")
-    ledger = None
-    if os.path.exists(ledger_path):
-        with open(ledger_path) as f:
-            ledger = json.load(f)
-    if ledger is not None and batch_id <= int(ledger["batch_id"]):
+    recover_table_dir(state_path)
+    ledger = _read_marker(os.path.join(state_path, AGG_LEDGER))
+    recorded = None if ledger is None else ledger["batch_id"]
+    if _batch_applied(f"chunked {codec.kind} ingest", batch_id, recorded):
         return  # fully committed — replay is a no-op
     _guard_lost_corpus(ledger, corpus_path, batch_id, codec.kind)
     chunks = batch_df.select(
@@ -1455,17 +1414,12 @@ def _apply_chunked_batch(
     write_and_swap(
         new_state,
         state_path,
-        extra_files={
-            "_applied_batch.json": json.dumps(
-                # corpus_written: evaluated AFTER the corpus write so the
-                # flag only turns true once a clip actually finished;
-                # _guard_lost_corpus keys off it on restart.
-                {
-                    "batch_id": batch_id,
-                    "corpus_written": os.path.exists(corpus_path),
-                }
-            )
-        },
+        # corpus_written: evaluated AFTER the corpus write so the flag
+        # only turns true once a clip actually finished;
+        # _guard_lost_corpus keys off it on restart.
+        extra_files=_ledger_file(
+            {"batch_id": batch_id, "corpus_written": os.path.exists(corpus_path)}
+        ),
     )
 
 
@@ -1714,8 +1668,9 @@ def apply_search_index_batch(
     partitions, so a replayed batch (foreachBatch is at-least-once)
     REWRITES exactly its own partitions instead of duplicating them;
     the stats sidecar carries ``last_batch_id`` and skips replayed
-    bumps. This index layout is streaming-owned (extra ``batch``
-    partition level under ``pbucket``) — probe it with the standard
+    bumps (an earlier batch id raises: a reset checkpoint). This index
+    layout is streaming-owned (extra ``batch`` partition level under
+    ``pbucket``) — probe it with the standard
     :func:`~dataflow_python_etl_spark.operators.search.search_index`
     (partition pruning on pbucket is unaffected; the batch column is
     never read). Batch 0 creates the index; a restart that finds no
@@ -1724,20 +1679,20 @@ def apply_search_index_batch(
 
     Exposed as a module function (not a closure) so replay semantics
     are directly testable."""
-    import json
     import os
 
     from dataflow_python_etl_spark.functions.text import md5_hash60, tokens
-    from dataflow_python_etl_spark.operators.search import (
-        SEARCH_STATS,
-        _write_search_stats,
-        load_search_stats,
+    from dataflow_python_etl_spark.operators.search import SEARCH_STATS
+    from dataflow_python_etl_spark.operators.upsert import (
+        _batch_applied,
+        _read_marker,
+        _write_marker,
     )
 
-    have_sidecar = os.path.exists(os.path.join(path, SEARCH_STATS))
-    if have_sidecar:
-        stats = load_search_stats(path)
-        if stats.get("last_batch_id", -1) >= batch_id:
+    stats = _read_marker(os.path.join(path, SEARCH_STATS))
+    if stats is not None:
+        recorded = stats.get("last_batch_id")
+        if _batch_applied("stream_docs_to_search_index", batch_id, recorded):
             return  # replayed, fully applied batch: no-op
         n_buckets = stats["n_buckets"]
     elif batch_id > 0:
@@ -1775,8 +1730,8 @@ def apply_search_index_batch(
     s = lens.agg(
         F.count(F.lit(1)).alias("n"), F.coalesce(F.sum("dl"), F.lit(0)).alias("s")
     ).first()
-    _write_search_stats(
-        path,
+    _write_marker(
+        os.path.join(path, SEARCH_STATS),
         {
             "n_docs": stats["n_docs"] + s["n"],
             "sum_dl": stats["sum_dl"] + int(s["s"]),

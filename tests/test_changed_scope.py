@@ -79,7 +79,9 @@ def test_certify_duration_ledger_and_shard_packing(tmp_path, monkeypatch):
         '<testsuites><testsuite><testcase classname="tests.test_lm" '
         'name="a" time="1.5"/><testcase classname="tests.test_lm" '
         'name="b" time="2.0"/><testcase classname="tests.test_corpus" '
-        'name="c" time="3.25"/></testsuite></testsuites>'
+        'name="c" time="3.25"/><testcase '
+        'classname="tests.test_core_functions.TestScalars" name="d" '
+        'time="0.75"/></testsuite></testsuites>'
     )
     ledger_path = tmp_path / "ledger.json"
     ledger_path.write_text(json.dumps({"tests/test_plans.py": 9.0}))
@@ -88,4 +90,6 @@ def test_certify_duration_ledger_and_shard_packing(tmp_path, monkeypatch):
     got = json.loads(ledger_path.read_text())
     assert got["tests/test_lm.py"] == 3.5
     assert got["tests/test_corpus.py"] == 3.25
+    # class-based tests count toward their module's file
+    assert got["tests/test_core_functions.py"] == 0.75
     assert got["tests/test_plans.py"] == 9.0  # untouched entry survives

@@ -558,3 +558,31 @@ def test_streaming_search_index_parity_and_replay(spark, tmp_path):
     shutil.rmtree(idx)
     with pytest.raises(ValueError, match="restarted search-index sink"):
         apply_search_index_batch(b1, 2, idx)
+
+
+def test_streaming_search_index_reset_checkpoint_raises(spark, tmp_path):
+    """Only the recorded batch is a replay: a batch id below the stats
+    sidecar's ``last_batch_id`` means a checkpoint reset over a live
+    index, which fails loudly (naming the sink) instead of silently
+    dropping every early batch."""
+    import pytest
+
+    from dataflow_python_etl_spark.operators.search import load_search_stats
+    from dataflow_python_etl_spark.streaming.pipeline import (
+        apply_search_index_batch,
+    )
+
+    ddl = "doc_id long, text string"
+    b0 = spark.createDataFrame([(1, "alpha bravo"), (2, "bravo charlie")], ddl)
+    b1 = spark.createDataFrame([(3, "delta echo")], ddl)
+    idx = str(tmp_path / "idx")
+    apply_search_index_batch(b0, 0, idx, n_buckets=4)
+    apply_search_index_batch(b1, 1, idx, n_buckets=4)
+    before = load_search_stats(idx)
+    with pytest.raises(
+        RuntimeError, match="stream_docs_to_search_index: .*checkpoint was reset"
+    ):
+        apply_search_index_batch(b0, 0, idx, n_buckets=4)
+    assert load_search_stats(idx) == before == {
+        "n_docs": 3, "sum_dl": 6, "n_buckets": 4, "last_batch_id": 1,
+    }

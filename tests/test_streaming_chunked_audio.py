@@ -270,6 +270,50 @@ def test_chunked_audio_lost_corpus_still_refuses(spark, tmp_path):
         _apply(spark, _chunk_rows(2, _clip(rng, 2048), 2), 1, paths)
 
 
+def test_chunked_audio_replay_after_mid_swap_crash(spark, tmp_path):
+    """A kill between the state swap's two renames leaves the carry
+    state only in its ``.__bak_*`` sibling. The re-delivered batch must
+    restore it before reading the ledger: an empty carry state would
+    silently drop every open clip the batch does not touch, and that
+    clip's next chunk would then fail as "out of order"."""
+    import shutil
+
+    rng = np.random.RandomState(31)
+    paths = _paths(tmp_path)
+    a = _chunk_rows(1, _clip(rng, 1500), 3)
+    b = _chunk_rows(2, _clip(rng, 1500), 3)
+    _apply(spark, a[:1] + b[:1], 0, paths)
+    state_b0 = str(tmp_path / "state_b0")
+    shutil.copytree(paths["state_path"], state_b0)
+    _apply(spark, b[1:], 1, paths)  # clip 1 stays open, untouched
+    # the kill: batch 1's partitions are written, the old state was
+    # renamed aside, the new one never moved in
+    shutil.rmtree(paths["state_path"])
+    shutil.move(state_b0, paths["state_path"] + ".__bak_0000dead")
+
+    _apply(spark, b[1:], 1, paths)  # at-least-once re-delivery
+    _apply(spark, a[1:], 2, paths)
+    got = sorted(
+        r["clip_id"] for r in spark.read.parquet(paths["corpus_path"]).collect()
+    )
+    assert got == [1, 2]
+    assert spark.read.parquet(paths["state_path"]).count() == 0
+
+
+def test_chunked_audio_reset_checkpoint_raises(spark, tmp_path):
+    """A batch id BELOW the ledger's is never a foreachBatch replay
+    (that re-delivers only the recorded batch): it means the checkpoint
+    was reset over a live sink, and skipping it would silently drop
+    every early batch. It fails loudly, naming the sink."""
+    rng = np.random.RandomState(37)
+    paths = _paths(tmp_path)
+    rows = _chunk_rows(1, _clip(rng, 1200), 2)
+    _apply(spark, rows[:1], 0, paths)
+    _apply(spark, rows[1:], 1, paths)
+    with pytest.raises(RuntimeError, match="chunked audio ingest: .*checkpoint was reset"):
+        _apply(spark, rows[:1], 0, paths)
+
+
 def test_stream_chunked_audio_e2e(spark, tmp_path):
     """Thin readStream wiring check: two source files become two
     micro-batches; a trim split across them is dropped, its source

@@ -457,16 +457,21 @@ def test_refresh_additive_agg_ledger_makes_replay_noop(spark, tmp_path):
     assert got == {"a": 5, "b": 1}
 
 
+def _read_agg_ledger(table_path: str):
+    import os
+
+    from dataflow_python_etl_spark.operators.upsert import AGG_LEDGER, _read_marker
+
+    return _read_marker(os.path.join(table_path, AGG_LEDGER))["last_batch_id"]
+
+
 def test_refresh_additive_agg_ledgerless_fold_keeps_ledger(spark, tmp_path):
     """A batch caller folding WITHOUT a batch_id into a ledgered table
     must not erase the ledger (write_and_swap rebuilds the dir, so the
     sidecar must be carried forward explicitly): a streaming restart
     after such a mixed fold would otherwise find no ledger and
     double-count its replayed batch."""
-    from dataflow_python_etl_spark.operators.upsert import (
-        _read_agg_ledger,
-        refresh_additive_agg,
-    )
+    from dataflow_python_etl_spark.operators.upsert import refresh_additive_agg
 
     path = str(tmp_path / "mv")
     b0 = spark.createDataFrame([("a", 2)], "k string, n long")
@@ -480,6 +485,24 @@ def test_refresh_additive_agg_ledgerless_fold_keeps_ledger(spark, tmp_path):
     refresh_additive_agg(spark, path, b0, ["k"], batch_id=7)
     got = {r["k"]: r["n"] for r in spark.read.parquet(path).collect()}
     assert got == {"a": 2, "b": 4}
+
+
+def test_refresh_additive_agg_reset_checkpoint_raises(spark, tmp_path):
+    """Only the recorded batch is a replay: a batch id below the ledger
+    means a checkpoint reset over a live MV, which must fail loudly
+    (naming the sink) instead of silently skipping every early batch."""
+    import pytest
+
+    from dataflow_python_etl_spark.operators.upsert import refresh_additive_agg
+
+    path = str(tmp_path / "mv")
+    b0 = spark.createDataFrame([("a", 2)], "k string, n long")
+    b1 = spark.createDataFrame([("a", 3)], "k string, n long")
+    refresh_additive_agg(spark, path, b0, ["k"], batch_id=0)
+    refresh_additive_agg(spark, path, b1, ["k"], batch_id=1)
+    with pytest.raises(RuntimeError, match="refresh_additive_agg: .*checkpoint was reset"):
+        refresh_additive_agg(spark, path, b0, ["k"], batch_id=0)
+    assert [tuple(r) for r in spark.read.parquet(path).collect()] == [("a", 5)]
 
 
 def test_stream_additive_agg_parity_and_restart_guard(spark, tmp_path):
@@ -640,7 +663,6 @@ def test_compact_table_rows_sidecars_and_file_count(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from dataflow_python_etl_spark.operators.upsert import (
-        _read_agg_ledger,
         compact_table,
         refresh_additive_agg,
     )

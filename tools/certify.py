@@ -159,9 +159,13 @@ def _update_durations(xml_paths: list) -> None:
         except Exception:
             continue
         for tc in root.iter("testcase"):
-            cls = tc.get("classname", "")
-            mod = cls.split(".")[-1] if cls else ""
-            if not mod.startswith("test_"):
+            # the module is the dotted part named test_*: a class-based
+            # test's classname ends in its class (tests.test_foo.TestBar)
+            mod = next(
+                (p for p in tc.get("classname", "").split(".") if p.startswith("test_")),
+                "",
+            )
+            if not mod:
                 continue
             f = f"tests/{mod}.py"
             per_file[f] = per_file.get(f, 0.0) + float(tc.get("time", 0.0))
