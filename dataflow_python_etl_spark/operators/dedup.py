@@ -50,10 +50,11 @@ MINHASH_AB: list[tuple[int, int]] = _hash_family(32, seed=1203)
 SIMHASH_AB: list[tuple[int, int]] = _hash_family(64, seed=4107)
 
 
-# Operator-internal caches (the exploded shingle streams). Spark can't
-# unpersist before the lazy result is consumed, so operators register
-# their caches here and callers (bench, long-lived services) reclaim
-# storage with unpersist_all() between queries.
+# Operator-internal caches (the exploded shingle streams) and lineage
+# cuts. Spark can't unpersist before the lazy result is consumed, so
+# operators register them here and callers (bench, long-lived
+# services, the streaming sinks after each batch) reclaim storage with
+# unpersist_all() between queries.
 _PERSISTED: list[DataFrame] = []
 
 
@@ -68,14 +69,35 @@ def _persist(df: DataFrame) -> DataFrame:
 register_cache = _persist
 
 
+def _cut(df: DataFrame) -> DataFrame:
+    """Eager ``localCheckpoint``, registered for :func:`unpersist_all`.
+
+    For batch-scoped intermediates with several consumers: unlike a
+    cache, the cut frame's plan is one ``LogicalRDD`` leaf, so every
+    consumer plans (and AQE re-renders) a short tree instead of the
+    nested cached lineage. A released cut frame fails on its next use
+    (``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``) rather than recomputing.
+    """
+    df = df.localCheckpoint(eager=True)
+    _PERSISTED.append(df)
+    return df
+
+
+def _release(df: DataFrame) -> None:
+    if df.is_cached:
+        df.unpersist()
+    else:  # a _cut: free the checkpointed RDD's blocks
+        df._jdf.logicalPlan().rdd().unpersist(False)
+
+
 def unpersist_all() -> int:
-    """Release every cache registered by dedup operators; returns count."""
+    """Release every cache and cut registered by operators; returns count."""
     import warnings
 
     n = 0
     while _PERSISTED:
         try:
-            _PERSISTED.pop().unpersist()
+            _release(_PERSISTED.pop())
             n += 1
         except Exception as e:  # dead session/context: nothing to free,
             # but say so — a swallowed failure here is exactly the
@@ -584,7 +606,6 @@ def _verify_jaccard(
     text_col: str,
     n: int,
     threshold: float,
-    dedup_ids: bool = False,
 ) -> DataFrame:
     """Exact-Jaccard verification of candidate (doc_a, doc_b) pairs.
 
@@ -594,25 +615,11 @@ def _verify_jaccard(
     narrow pair generation — see ``_posting_common``). Posting pairs
     include doc pairs that share a shingle without being candidates;
     the semi join with ``candidates`` keeps exactly the LSH pair set.
-
-    ``dedup_ids`` collapses duplicate (id, text) rows AFTER the
-    candidate pruning (so the extra shuffle is bounded by the
-    candidate count, never corpus-sized). The incremental ingest path
-    needs it: a crash-replayed batch can legitimately appear on BOTH
-    sides of corpus ∪ batch, and a doubled doc would double its
-    posting rows — inflating ``common`` and ``sz`` and corrupting
-    every Jaccard score it touches.
+    Suits corpus-sized, non-distinct candidate sets
+    (:func:`minhash_lsh_pairs`); a batch-sized distinct set is cheaper
+    through :func:`_verify_pairs`.
     """
-    # no .distinct() on either frame: both consumers are the RIGHT
-    # side of a left_semi join, which tolerates duplicate rows — a
-    # distinct here would add a whole exchange+aggregate stage to
-    # dedup rows the semi join ignores anyway
-    needed = candidates.select(F.col("doc_a").alias("doc")).union(
-        candidates.select("doc_b")
-    )
-    docs_c = docs.join(needed.withColumnRenamed("doc", id_col), id_col, "left_semi")
-    if dedup_ids:
-        docs_c = docs_c.dropDuplicates([id_col])
+    docs_c = docs.join(_candidate_ids(candidates, id_col), id_col, "left_semi")
     sh_c = _persist(_doc_shingles(docs_c, id_col, text_col, n))
     sizes = sh_c.groupBy("doc").agg(F.count(F.lit(1)).alias("sz"))
     common = _posting_common(_postings(sh_c, None)).join(
@@ -626,6 +633,71 @@ def _verify_jaccard(
         .withColumn(
             "jaccard",
             F.round(F.col("common") / (F.col("za.sz") + F.col("zb.sz") - F.col("common")), 6),
+        )
+        .where(F.col("jaccard") >= threshold)
+        .select("doc_a", "doc_b", "jaccard")
+    )
+
+
+def _candidate_ids(candidates: DataFrame, id_col: str) -> DataFrame:
+    """Every id on either side of ``candidates``, as ``id_col``. Not
+    distinct: both consumers are the RIGHT side of a left_semi join,
+    which tolerates duplicate rows — a distinct here would add a whole
+    exchange+aggregate stage to dedup rows the semi join ignores."""
+    return candidates.select(F.col("doc_a").alias(id_col)).union(
+        candidates.select(F.col("doc_b").alias(id_col))
+    )
+
+
+def _verify_pairs(
+    docs: DataFrame,
+    candidates: DataFrame,
+    id_col: str,
+    text_col: str,
+    n: int,
+    threshold: float,
+) -> DataFrame:
+    """Exact-Jaccard verification of a small, DISTINCT candidate set
+    with ``doc_a < doc_b``: each pair is checked directly on its two
+    shingle sets, with no posting lists.
+
+    One cut holds ``(doc, distinct shingles)`` for the candidate docs
+    only (semi-join-pruned), joined to the candidates on each side;
+    ``common = size(array_intersect)`` and the score is rounded as in
+    :func:`_verify_jaccard`, which it matches pair for pair. Docs with
+    no shingle and pairs with no common shingle never score, as in the
+    posting form (``common > 0`` keeps that at ``threshold=0``). The
+    ``dropDuplicates`` lets an id sit on both sides of a corpus ∪
+    batch union (a crash-replayed batch already in the corpus): a
+    doubled doc would otherwise double its pair rows.
+    """
+    sets = _cut(
+        docs.join(_candidate_ids(candidates, id_col), id_col, "left_semi")
+        .dropDuplicates([id_col])
+        .select(
+            F.col(id_col).alias("doc"),
+            F.array_distinct(shingles(text_col, n)).alias("sh"),
+        )
+        .where(F.size("sh") > 0)
+    )
+    sa = sets.alias("sa")
+    sb = sets.alias("sb")
+    common = (
+        candidates.join(sa, F.col("doc_a") == F.col("sa.doc"))
+        .join(sb, F.col("doc_b") == F.col("sb.doc"))
+        .select(
+            "doc_a",
+            "doc_b",
+            F.size(F.array_intersect("sa.sh", "sb.sh")).alias("common"),
+            F.size("sa.sh").alias("za"),
+            F.size("sb.sh").alias("zb"),
+        )
+        .where(F.col("common") > 0)
+    )
+    return (
+        common.withColumn(
+            "jaccard",
+            F.round(F.col("common") / (F.col("za") + F.col("zb") - F.col("common")), 6),
         )
         .where(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", "jaccard")
@@ -922,11 +994,14 @@ def minhash_lsh_pairs_incremental(
     in-plan (convenience for tests/small runs); pass the stored index
     in production. Ids must be unique across corpus ∪ batch; pairs are
     emitted with doc_a < doc_b, matching :func:`minhash_lsh_pairs` on
-    the union corpus restricted to pairs touching a new doc.
+    the union corpus restricted to pairs touching a new doc. The
+    batch's band rows, candidates and candidate shingle sets are
+    eager lineage cuts (``_cut``), so building the returned frame
+    already runs jobs; :func:`unpersist_all` releases the cuts.
     """
     if index is None:
         index = minhash_band_index(corpus, id_col, text_col, n, num_perm, rows_per_band)
-    new_bands = _persist(
+    new_bands = _cut(
         _band_frame(
             minhash_signatures(new_docs, id_col, text_col, n, num_perm),
             id_col,
@@ -940,56 +1015,63 @@ def minhash_lsh_pairs_incremental(
 
 
 def _lsh_pairs_incremental(
-    corpus: DataFrame,
+    corpus: DataFrame | None,
     new_docs: DataFrame,
     new_bands: DataFrame,
-    index: DataFrame,
+    index: DataFrame | None,
     id_col: str,
     text_col: str,
     n: int,
     threshold: float,
 ) -> DataFrame:
     """:func:`minhash_lsh_pairs_incremental` over the batch's band rows
-    ``new_bands`` ((doc, band, sig), cached by the caller, who may
-    reuse them — the streaming sink appends the survivors' rows to the
-    index from the same cache instead of re-signing the survivors)."""
+    ``new_bands`` ((doc, band, sig), cut by the caller, who may reuse
+    them — the streaming sink appends the survivors' rows to the index
+    from the same cut instead of re-signing the survivors).
+    ``corpus=None, index=None`` is a first batch: the only candidates
+    come from the batch's own band self-join.
+
+    The distinct candidates are cut, then verified pair by pair
+    (:func:`_verify_pairs`, itself one more cut): each cut's consumers
+    plan a one-leaf tree, not the nested cached lineage."""
     nb = new_bands.alias("nb")
-    ix = index.alias("ix")
-    # new-vs-corpus: probe the stored index. A corpus doc can also
-    # appear in the batch stream only if ids collide, which the
-    # contract forbids, so no self-pair guard is needed here.
-    cand_old = nb.join(
-        ix,
-        (F.col("nb.band") == F.col("ix.band")) & (F.col("nb.sig") == F.col("ix.sig")),
-    ).select(
-        F.least(F.col("ix.doc"), F.col("nb.doc")).alias("doc_a"),
-        F.greatest(F.col("ix.doc"), F.col("nb.doc")).alias("doc_b"),
-    )
     # new-vs-new: the batch can duplicate itself
     b2 = new_bands.alias("b2")
-    cand_new = nb.join(
+    candidates = nb.join(
         b2,
         (F.col("nb.band") == F.col("b2.band"))
         & (F.col("nb.sig") == F.col("b2.sig"))
         & (F.col("nb.doc") < F.col("b2.doc")),
     ).select(F.col("nb.doc").alias("doc_a"), F.col("b2.doc").alias("doc_b"))
+    if index is not None:
+        # new-vs-corpus: probe the stored index. A replayed index
+        # append (crash between the index and corpus writes) holds
+        # the batch's own band rows, so the probe pairs a doc with
+        # itself; doc_a < doc_b drops that identity pair, which would
+        # otherwise verify at Jaccard 1 and remove the doc.
+        ix = index.alias("ix")
+        cand_old = (
+            nb.join(
+                ix,
+                (F.col("nb.band") == F.col("ix.band"))
+                & (F.col("nb.sig") == F.col("ix.sig")),
+            )
+            .select(
+                F.least(F.col("ix.doc"), F.col("nb.doc")).alias("doc_a"),
+                F.greatest(F.col("ix.doc"), F.col("nb.doc")).alias("doc_b"),
+            )
+            .where(F.col("doc_a") < F.col("doc_b"))
+        )
+        candidates = cand_old.union(candidates)
     # UNLIKE minhash_lsh_pairs, distinct: the probe's candidate set is
     # batch-sized (the ≤ num_bands-fold band repeats and replayed index
-    # rows only repeat pairs), and the distinct's shuffle is the
-    # boundary AQE coalesces the cache at — without it the cache keeps
-    # the index scan's bucket width plus the batch join's partitions,
-    # and _verify_jaccard's `needed` union doubles that. Semantically a
-    # no-op: every consumer is a left_semi join or that union.
-    candidates = _persist(cand_old.union(cand_new).distinct())
-    all_docs = corpus.select(id_col, text_col).union(new_docs.select(id_col, text_col))
-    # dedup_ids: tolerate a crash-replayed batch already present in the
-    # corpus (same id on both sides of the union) — see _verify_jaccard.
-    # Identity candidates (a band match of a doc against its own corpus
-    # copy) are excluded by _posting_common's a < b, so a replayed doc
-    # never "near-dups itself" into a removal.
-    return _verify_jaccard(
-        all_docs, candidates, id_col, text_col, n, threshold, dedup_ids=True
-    )
+    # rows only repeat pairs), _verify_pairs needs each pair once, and
+    # the distinct's shuffle is where AQE coalesces the cut to its rows.
+    candidates = _cut(candidates.distinct())
+    docs = new_docs.select(id_col, text_col)
+    if corpus is not None:
+        docs = corpus.select(id_col, text_col).union(docs)
+    return _verify_pairs(docs, candidates, id_col, text_col, n, threshold)
 
 
 def simhash(

@@ -374,7 +374,7 @@ def _ingest_single_row(
 
     from pyspark.sql import Observation
 
-    from dataflow_python_etl_spark.operators.dedup import unpersist_all
+    from dataflow_python_etl_spark.operators.dedup import _cut, unpersist_all
     from dataflow_python_etl_spark.operators.upsert import _read_marker, _write_marker
 
     if replay_guard not in ("anti_join", "watermark"):
@@ -425,8 +425,13 @@ def _ingest_single_row(
         obs = Observation() if replay_guard == "watermark" else None
         decided = batch if obs is None else batch.observe(obs, F.max(id_col).alias("max_id"))
         # materialize before the appends so both writes see one
-        # consistent survivor set (and the probe caches can be freed)
-        survivors = decided.join(removals, id_col, "left_anti").localCheckpoint(eager=True)
+        # consistent survivor set (and the probe caches can be freed);
+        # a registered cut, released with them below. The removal ids
+        # are at most the batch's ids, so broadcast them: a cut is sized
+        # by its source plan's estimate (huge after a join), and a
+        # sort-merge plan would put `decided` in a shuffle stage that
+        # AQE prunes, observation and all, when the batch is empty
+        survivors = _cut(decided.join(F.broadcast(removals), id_col, "left_anti"))
         max_ingested = None
         if obs is not None:
             max_ingested = obs.get["max_id"]
@@ -437,7 +442,7 @@ def _ingest_single_row(
                 # carry forward — skip the write rather than invent one.
                 if wm is not None:
                     _write_marker(wm_path, {"batch_id": batch_id, "max_id": wm["max_id"]})
-                unpersist_all()  # probe caches registered before the filter emptied
+                unpersist_all()  # probe caches and cuts registered before the filter emptied
                 return
         append_index(survivors)
         if replay_guard == "watermark":
@@ -493,9 +498,13 @@ def stream_dedup_ingest(
     The EXPENSIVE work per batch scales with the BATCH: signatures
     are computed for batch docs only, and verification re-shingles
     only HIT corpus docs (semi-join-pruned) — the corpus is never
-    re-signed. The batch's band rows are derived ONCE per batch and
-    cached: the same rows probe the index and, semi-joined with the
-    survivors, are appended to it (survivors are never re-signed).
+    re-signed. The batch's band rows are derived ONCE per batch into
+    a registered lineage cut (an eager ``localCheckpoint`` that
+    ``unpersist_all`` frees after the batch): the same rows probe the
+    index and, semi-joined with the survivors, are appended to it
+    (survivors are never re-signed). The distinct candidates and the
+    candidate docs' shingle sets are cuts too, and each candidate
+    pair is verified directly on its two sets.
     Two knobs remove the remaining corpus-sized per-batch costs:
 
     - ``index_table``: persist the band index as a catalog table
@@ -546,21 +555,19 @@ def stream_dedup_ingest(
     :func:`_ingest_single_row` contract. Text specifics: duplicate
     index rows from a crash between index and corpus appends are
     harmless because they only repeat candidate pairs, which the
-    probe's candidate ``distinct`` collapses (and every downstream
-    consumer reaches the corpus via semi-joins, idempotent under
-    duplicate probe rows anyway); a replay
-    against a corpus that already holds the batch converges because
-    the verification de-duplicates ids (see
-    ``_verify_jaccard(dedup_ids=True)``).
+    probe's candidate ``distinct`` collapses, and the identity pairs
+    they add (a doc against its own replayed rows) fail the probe's
+    ``doc_a < doc_b``; a replay against a corpus that already holds
+    the batch converges because the verification de-duplicates ids
+    (see ``dedup._verify_pairs``).
     """
     import os
 
     from dataflow_python_etl_spark.operators.dedup import (
         BandIndexStore,
         _band_frame,
+        _cut,
         _lsh_pairs_incremental,
-        _persist,
-        minhash_lsh_pairs,
         minhash_signatures,
     )
 
@@ -675,7 +682,7 @@ def stream_dedup_ingest(
     def probe(spark: SparkSession, batch: DataFrame, corpus: DataFrame | None):
         # the batch's band rows, derived ONCE: they feed the index probe
         # and, semi-joined with the survivors, the index append
-        new_bands = _persist(_bands(batch))
+        new_bands = _cut(_bands(batch))
 
         def append_index(survivors: DataFrame) -> None:
             bands = new_bands.join(
@@ -687,13 +694,10 @@ def stream_dedup_ingest(
             else:
                 bands.write.mode("append").parquet(index_path)
 
-        if corpus is None:
-            pairs = minhash_lsh_pairs(
-                batch, id_col, text_col, n, num_perm, rows_per_band, threshold
-            )
-            return pairs, append_index
-        st = _store(spark)
-        index = st.read() if st is not None else spark.read.parquet(index_path)
+        index = None
+        if corpus is not None:
+            st = _store(spark)
+            index = st.read() if st is not None else spark.read.parquet(index_path)
         pairs = _lsh_pairs_incremental(
             corpus, batch, new_bands, index, id_col, text_col, n, threshold
         )

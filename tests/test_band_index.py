@@ -341,3 +341,132 @@ def test_hot_bucket_probe_skew_split_balances_tasks(spark):
     assert len(balanced) >= 4, balanced
     assert balanced[0] / total_b <= 0.5, balanced[:8]
     assert balanced[0] < control[0] / 2, (balanced[0], control[0])
+
+
+def _pair_rows(df):
+    return {(r["doc_a"], r["doc_b"], r["jaccard"]) for r in df.collect()}
+
+
+def test_probe_drops_identity_pairs_of_a_replayed_index(spark):
+    """A crash between the index and corpus appends leaves the batch's
+    own band rows in the index, so the replayed probe matches each
+    batch doc against itself. Those (d, d) candidates must never reach
+    verification (they would score 1.0 and remove the doc): the pairs
+    equal the clean-index pairs, and only the real duplicate goes."""
+    from dataflow_python_etl_spark.operators.dedup import _cut, _lsh_pairs_incremental
+
+    unpersist_all()
+    corpus = _docs(spark, [(1, TEXTS["a"]), (2, TEXTS["b"])])
+    batch = _docs(spark, [(12, TEXTS["c"]), (13, TEXTS["d"]), (14, TEXTS["a"])])
+    new_bands = _cut(_band_frame(minhash_signatures(batch, "doc_id", "text", 3, 32), "doc_id", 32, 4))
+
+    def pairs(index):
+        return _pair_rows(
+            _lsh_pairs_incremental(corpus, batch, new_bands, index, "doc_id", "text", 3, 0.5)
+        )
+
+    replayed = pairs(minhash_band_index(corpus).unionByName(minhash_band_index(batch)))
+    clean = pairs(minhash_band_index(corpus))
+    unpersist_all()
+    assert all(a < b for a, b, _ in replayed), replayed
+    assert replayed == clean == {(1, 14, 1.0)}
+    removed = {d for a, b, _ in replayed for d in (a, b)} & {12, 13, 14}
+    assert removed == {14}
+
+
+def test_verify_pairs_matches_posting_verification(spark):
+    """The incremental probe's direct per-pair check (``_verify_pairs``)
+    scores every candidate exactly as the posting-list form
+    (``_verify_jaccard``) does, including: docs with fewer than n
+    tokens, empty and whitespace-only text, an id on both sides of the
+    corpus ∪ batch union (a replay), a score exactly at the threshold
+    after rounding, and a zero-common candidate at threshold 0."""
+    from dataflow_python_etl_spark.operators.dedup import _verify_jaccard, _verify_pairs
+
+    corpus_rows = [
+        (1, "w1 w2 w3 w4 w5"),
+        (2, "w1 w2 w3 w4 x5"),  # 2 common of 3 + 3 shingles: exactly 0.5
+        (3, "k1 k2 k3 k4"),
+        (4, "k1 k2 k3 z4"),  # 1 / 3 -> 0.333333 after rounding
+        (5, "too short"),  # fewer than n=3 tokens: no shingle
+        (6, ""),
+        (7, "   \t "),
+        (8, "unrelated tokens share nothing with the others"),
+    ]
+    batch_rows = [
+        (2, "w1 w2 w3 w4 x5"),  # replay: already in the corpus
+        (9, TEXTS["a"]),
+        (10, TEXTS["a"] + " again"),
+    ]
+    ids = sorted({i for i, _ in corpus_rows + batch_rows})
+    cands = spark.createDataFrame(
+        [(a, b) for a in ids for b in ids if a < b], "doc_a: long, doc_b: long"
+    )
+    union = _docs(spark, corpus_rows).union(_docs(spark, batch_rows))
+    unique = _docs(spark, corpus_rows + batch_rows[1:])
+    for threshold in (0.0, 0.333333, 0.5):
+        # as sorted lists: the replayed doc 2 must not double a pair row
+        want = sorted(_verify_jaccard(unique, cands, "doc_id", "text", 3, threshold).collect())
+        got = sorted(_verify_pairs(union, cands, "doc_id", "text", 3, threshold).collect())
+        unpersist_all()
+        assert got == want, (threshold, got, want)
+        assert (1, 2, 0.5) in got
+        assert ((3, 4, 0.333333) in got) == (threshold <= 0.333333)
+        assert (9, 10, 0.928571) in got
+        # no zero-common pair, even at threshold 0
+        assert all(j > 0 for _, _, j in got), got
+        assert not {d for a, b, _ in got for d in (a, b)} & {5, 6, 7, 8}
+
+
+def test_unpersist_all_releases_probe_cuts(spark):
+    """The probe's lineage cuts (band rows, candidates, candidate
+    shingle sets) are registered: ``unpersist_all`` frees their RDDs,
+    and a released frame fails loudly instead of recomputing."""
+    jsc = spark.sparkContext._jsc
+    unpersist_all()
+    before = jsc.getPersistentRDDs().size()
+    corpus = _docs(spark, [(1, TEXTS["a"]), (2, TEXTS["b"])])
+    new = _docs(spark, [(10, TEXTS["a"]), (11, TEXTS["c"])])
+    pairs = minhash_lsh_pairs_incremental(corpus, new, None, "doc_id", "text")
+    assert _pair_rows(pairs) == {(1, 10, 1.0)}
+    assert jsc.getPersistentRDDs().size() == before + 3
+    assert unpersist_all() == 3
+    assert jsc.getPersistentRDDs().size() == before
+    # a new query over the released frame (a re-collect of the same
+    # one would reuse its executed stages)
+    with pytest.raises(Exception, match="CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND"):
+        pairs.count()
+
+
+def test_stream_batches_release_every_registered_frame(spark, tmp_path):
+    """Each micro-batch's cuts and caches are released at its end: over
+    12 batches the session's persistent-RDD count never grows."""
+    from dataflow_python_etl_spark.operators import dedup
+    from dataflow_python_etl_spark.streaming.pipeline import stream_dedup_ingest
+
+    jsc = spark.sparkContext._jsc
+    src = str(tmp_path / "in")
+    texts = list(TEXTS.values())
+    _docs(spark, [(0, texts[0])]).coalesce(1).write.parquet(src)
+    unpersist_all()
+    before = jsc.getPersistentRDDs().size()
+    q = stream_dedup_ingest(
+        spark.readStream.schema("doc_id long, text string").parquet(src),
+        str(tmp_path / "corpus"),
+        str(tmp_path / "index"),
+        str(tmp_path / "ckpt"),
+        replay_guard="watermark",
+    )
+    sizes = []
+    for k in range(12):
+        if k:
+            rows = [(10 * k, texts[k % 4] + f" batch {k}"), (10 * k + 1, texts[(k + 1) % 4])]
+            _docs(spark, rows).coalesce(1).write.mode("append").parquet(src)
+        q.processAllAvailable()
+        sizes.append(jsc.getPersistentRDDs().size())
+    q.stop()
+    assert not dedup._PERSISTED
+    assert max(sizes) <= before, (before, sizes)
+    # the batches ran the probe: later batches repeat earlier texts
+    # exactly, and those copies were dropped
+    assert spark.read.parquet(str(tmp_path / "corpus")).count() < 1 + 2 * 11
