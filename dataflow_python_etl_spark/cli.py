@@ -142,20 +142,18 @@ def run_sql(args) -> None:
 def run_compact(args) -> None:
     """Compact a table's small files — streaming CDC upserts and
     incremental loads accrete files; scans pay per-file open cost and
-    lose row-group pruning. Rewrites to ceil(bytes / target-file-size)
-    files with write-and-swap (readers never see a missing table)."""
-    import math
-
-    from dataflow_python_etl_spark.operators.upsert import write_and_swap
+    lose row-group pruning. See :func:`operators.upsert.compact_table`
+    (partition layout and ``_``-prefixed sidecars carried through the
+    swap; refuses to run over unrecovered crash state)."""
+    from dataflow_python_etl_spark.operators.upsert import compact_table
 
     spark = get_spark("compact")
     path = _table_path(args.warehouse, args.table)
-    files = [p for p in Path(path).rglob("*.parquet")]
-    total_bytes = sum(p.stat().st_size for p in files)
-    n_out = max(1, math.ceil(total_bytes / args.target_file_mb / 1024 / 1024))
-    df = spark.read.parquet(path)
-    write_and_swap(df.repartition(n_out), path)
-    print(f"{args.table}: {len(files)} files ({total_bytes} B) -> {n_out} files")
+    st = compact_table(spark, path, target_file_bytes=args.target_file_mb * 1024 * 1024)
+    print(
+        f"{args.table}: {st['n_files_before']} files ({st['bytes_before']} B) "
+        f"-> {st['n_files_after']} files"
+    )
 
 
 def run_zorder(args) -> None:

@@ -86,8 +86,11 @@ def _cut(df: DataFrame) -> DataFrame:
 def _release(df: DataFrame) -> None:
     if df.is_cached:
         df.unpersist()
-    else:  # a _cut: free the checkpointed RDD's blocks
-        df._jdf.logicalPlan().rdd().unpersist(False)
+    else:  # a _cut: free the checkpointed RDD's blocks — the call
+        # RDD.unpersist makes, minus its per-RDD "lineage has been
+        # truncated" WARN
+        rdd_id = df._jdf.logicalPlan().rdd().id()
+        df.sparkSession.sparkContext._jsc.sc().unpersistRDD(rdd_id, False)
 
 
 def unpersist_all() -> int:

@@ -265,71 +265,6 @@ def cosine_pairs_lsh(
     )
 
 
-def cosine_topk_arrow(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Arrow-vectorized variant of :func:`cosine_topk`.
-
-    The expression-tree version evaluates interpreted higher-order
-    functions per pair; this one ships the (small, collected) query
-    matrix into a ``mapInPandas`` kernel and scores each corpus batch
-    against ALL queries with one numpy matmul — the realistic 100 TB
-    path when the scoring math outgrows Catalyst expressions.
-    Numerically this sums in a different order than the sequential
-    definition, so results can differ in the last ulp — it is kept out
-    of the oracle-checked set and pinned against :func:`cosine_topk`
-    in tests instead.
-    """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    q_rows = queries.select(id_col, vec_col).collect()
-    q_ids = np.array([r[0] for r in q_rows], dtype=np.int64)
-    q_mat = np.array([r[1] for r in q_rows], dtype=np.float64)
-    q_norm = np.linalg.norm(q_mat, axis=1)
-
-    out_schema = T.StructType(
-        [
-            T.StructField("query_id", T.LongType()),
-            T.StructField("neighbor_id", T.LongType()),
-            T.StructField("cos_sim", T.DoubleType()),
-        ]
-    )
-
-    def kernel(batches):
-        for pdf in batches:
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            mat = np.array(list(pdf[vec_col]), dtype=np.float64)
-            if len(mat) == 0:
-                continue
-            norms = np.linalg.norm(mat, axis=1)
-            sims = (mat @ q_mat.T) / np.outer(norms, q_norm)  # [batch, nq]
-            nb, nq = sims.shape
-            yield pd.DataFrame(
-                {
-                    "query_id": np.repeat(q_ids[np.newaxis, :], nb, 0).ravel(),
-                    "neighbor_id": np.repeat(ids, nq),
-                    "cos_sim": np.round(sims.ravel(), 6),
-                }
-            )
-
-    scored = corpus.select(id_col, vec_col).mapInPandas(kernel, out_schema)
-    scored = scored.where(F.col("neighbor_id") != F.col("query_id"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "cos_sim")
-    )
-
-
 # --- IVF with a fitted coarse quantizer ------------------------------------
 
 def fit_ivf_centroids(

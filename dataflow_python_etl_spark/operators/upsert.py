@@ -6,8 +6,7 @@ Vanilla Spark has no mutable storage, so an upsert is a recompute:
 ``existing ANTI-JOIN keys(updates) UNION updates`` → write to a temp
 path → swap. One shuffle (the anti join on the key; broadcast when
 the update batch is small, which is the common CDC case), atomic-ish
-swap at the end. On a transactional table format (Delta/Iceberg) this
-becomes a real MERGE INTO; the operator's contract stays the same.
+swap at the end.
 """
 
 from __future__ import annotations
@@ -64,8 +63,7 @@ def write_and_swap(
     because :func:`vacuum_table_dir` and :func:`recover_table_dir`
     depend on the exact ``.__tmp_`` / ``.__bak_`` naming conventions —
     five hand-rolled copies of this triple had already drifted (one
-    crashed on single-file targets; a sixth copy in ``sources/
-    formats.py`` is now this function's ``fmt`` parameter).
+    crashed on single-file targets).
 
     ``extra_files`` ({name: content}) are written INTO the tmp dir
     before the swap, so sidecar state (e.g. the additive-refresh
@@ -254,9 +252,10 @@ def upsert_df(
 def _guard_duplicate_source_keys(
     source: DataFrame, key_cols: list[str], label: str
 ) -> DataFrame:
-    """Distributed duplicate-source-key rejection shared by every
-    MERGE implementation: duplicate fully-non-null source keys would
-    apply a nondeterministic one-of-N update, so they fail loudly.
+    """Distributed duplicate-source-key rejection shared by
+    :func:`merge_df` and ``table_diff``: duplicate fully-non-null
+    source keys would apply a nondeterministic one-of-N update, so
+    they fail loudly.
 
     The guard lives in a FILTER over the window output (a dead
     projected column would be pruned by Catalyst, silently removing
@@ -448,86 +447,11 @@ def merge_table(
     **clauses,
 ) -> DataFrame:
     """MERGE into a parquet table path with write-to-temp-and-swap
-    (same adapter shape as :func:`upsert_table`; on Delta/Iceberg the
-    body becomes a real transactional ``MERGE INTO`` and the swap
-    disappears — callers keep the same contract)."""
+    (same adapter shape as :func:`upsert_table`)."""
     existing = spark.read.parquet(table_path)
     merged = merge_df(existing, source, key_cols, **clauses)
     write_and_swap(merged, table_path)
     return spark.read.parquet(table_path)
-
-
-def merge_table_transactional(
-    spark: SparkSession,
-    table_path: str,
-    source: DataFrame,
-    key_cols: list[str],
-    *,
-    when_matched_update: dict[str, Column] | None = None,
-    when_matched_update_condition: Column | None = None,
-    when_matched_delete_condition: Column | None = None,
-    when_not_matched_insert: dict[str, Column] | None = None,
-    when_not_matched_insert_condition: Column | None = None,
-    fail_on_duplicate_source_keys: bool = True,
-) -> DataFrame:
-    """:func:`merge_table`'s transactional twin: a real ``MERGE INTO``
-    against a Delta-format table when the ``delta-spark`` package is
-    available, so the write-to-temp-and-swap disappears and two
-    writers serialize through the log instead of racing on a rename.
-
-    Same clause family, same semantics as :func:`merge_df` — clauses
-    apply in delete → update → insert order, a NULL clause condition
-    does not fire (Delta evaluates conditions with SQL WHERE
-    semantics, matching ``merge_df``'s ``coalesce(c, False)``), and
-    conditions/assignments reference the ``t``/``s`` aliases. The
-    duplicate-source-key guard is pre-applied to the source for exact
-    parity: Delta alone only errors when duplicates MATCH a target
-    row, while :func:`merge_df` rejects any duplicated fully-non-null
-    source key.
-
-    Raises ``NotImplementedError`` when delta-spark is not installed
-    (this sandbox) — callers fall back to :func:`merge_table`.
-    """
-    try:
-        from delta.tables import DeltaTable
-    except ImportError as e:  # pragma: no cover - exercised via test skip logic
-        raise NotImplementedError(
-            "merge_table_transactional requires the delta-spark package; "
-            "use merge_table (parquet + swap) instead"
-        ) from e
-
-    tgt = DeltaTable.forPath(spark, table_path)
-    if when_matched_update is None and when_matched_update_condition is not None:
-        raise ValueError("when_matched_update_condition requires when_matched_update")
-    if when_not_matched_insert is None and when_not_matched_insert_condition is not None:
-        raise ValueError("when_not_matched_insert_condition requires when_not_matched_insert")
-    if when_not_matched_insert is not None:
-        missing = set(tgt.toDF().columns) - set(when_not_matched_insert)
-        if missing:
-            raise ValueError(f"insert assignments missing target columns: {sorted(missing)}")
-
-    if fail_on_duplicate_source_keys:
-        source = _guard_duplicate_source_keys(
-            source, key_cols, "merge_table_transactional"
-        )
-
-    cond = None
-    for k in key_cols:
-        eq = F.col(f"t.{k}") == F.col(f"s.{k}")
-        cond = eq if cond is None else cond & eq
-    b = tgt.alias("t").merge(source.alias("s"), cond)
-    if when_matched_delete_condition is not None:
-        b = b.whenMatchedDelete(condition=when_matched_delete_condition)
-    if when_matched_update is not None:
-        b = b.whenMatchedUpdate(
-            condition=when_matched_update_condition, set=when_matched_update
-        )
-    if when_not_matched_insert is not None:
-        b = b.whenNotMatchedInsert(
-            condition=when_not_matched_insert_condition, values=when_not_matched_insert
-        )
-    b.execute()
-    return spark.read.format("delta").load(table_path)
 
 
 def upsert_table(

@@ -119,26 +119,3 @@ def overwrite_table(df: DataFrame, path: str) -> None:
     from dataflow_python_etl_spark.operators.upsert import write_and_swap
 
     write_and_swap(df, path)
-
-
-def write_table_as(df: DataFrame, path: str, fmt: str = "parquet", **options) -> None:
-    """Format-agnostic WRITE_TRUNCATE sink: ``parquet`` (default),
-    ``orc``, ``json`` (lines), or ``csv``. Columnar formats keep
-    predicate pushdown and column pruning; json/csv are interchange
-    sinks — scans over them read every byte, so they are for export,
-    not for the 100 TB query path."""
-    from dataflow_python_etl_spark.operators.upsert import write_and_swap
-
-    write_and_swap(df, path, fmt=fmt, options=dict(options))
-
-
-def read_table_as(
-    spark: SparkSession, path: str, fmt: str = "parquet", schema=None, **options
-) -> DataFrame:
-    """Format-agnostic table read. For json/csv pass an explicit
-    ``schema``: inference scans the data once before the real read and
-    widens everything it cannot prove — never acceptable at scale."""
-    reader = spark.read.format(fmt).options(**options)
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.load(path)

@@ -1,17 +1,12 @@
-"""Sinks beyond plain overwrite: partitioned and bucketed tables.
+"""Bucketed catalog tables.
 
-At 100 TB the physical layout IS the optimization:
-
-- ``write_partitioned``: hive-style directory partitioning on a
-  low-cardinality column (date, region). Queries filtering on the
-  partition column prune whole directories before any I/O
-  (PartitionFilters in the scan, distinct from row-group pushdown).
-- ``write_bucketed``: pre-shuffle the table ONCE into N buckets by the
-  join/agg key. Two tables bucketed the same way join with ZERO
-  exchanges — the shuffle is amortized into the write. This is the
-  Spark-native answer to the reference's "all results from a given
-  account number on one worker" comment
-  (reference ``src/datalake_to_mart.py:157-160``).
+At 100 TB the physical layout IS the optimization: pre-shuffle the
+table ONCE into N buckets by the join/agg key, and two tables bucketed
+the same way join with ZERO exchanges — the shuffle is amortized into
+the write. This is the Spark-native answer to the reference's "all
+results from a given account number on one worker" comment
+(reference ``src/datalake_to_mart.py:157-160``). Hive-style directory
+partitioning is ``operators.upsert.write_and_swap(partition_by=)``.
 
 Bucketed tables must go through ``saveAsTable`` (the bucket metadata
 lives in the catalog, not the parquet files).
@@ -19,13 +14,7 @@ lives in the catalog, not the parquet files).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
-
-def write_partitioned(
-    df: DataFrame, path: str, partition_cols: list[str], mode: str = "overwrite"
-) -> None:
-    df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
+from pyspark.sql import DataFrame
 
 
 def write_bucketed(
@@ -49,9 +38,3 @@ def write_bucketed(
         w = w.option("path", path)
     w.format("parquet").saveAsTable(table)
 
-
-def bucketed_join(
-    spark: SparkSession, left_table: str, right_table: str, key: str, how: str = "inner"
-) -> DataFrame:
-    """Join two same-bucketed catalog tables — shuffle-free by layout."""
-    return spark.table(left_table).join(spark.table(right_table), on=key, how=how)

@@ -183,7 +183,6 @@ def stream_cdc_to_table(
     key_cols: list[str],
     checkpoint: str,
     op_col: str = "op",
-    engine: str = "parquet",
 ) -> "pyspark.sql.streaming.StreamingQuery":  # noqa: F821
     """Op-coded CDC apply: each micro-batch carries rows tagged
     ``op in ('I','U','D')`` (the Debezium/binlog shape); inserts and
@@ -200,39 +199,29 @@ def stream_cdc_to_table(
     before the sink. Replaying a batch re-applies the same merge:
     idempotent by key. Batch 0 goes through the same merge against an
     empty table, so the guard holds from the first batch.
-
-    ``engine="delta"`` routes every batch through
-    :func:`operators.upsert.merge_table_transactional` — a real
-    ``MERGE INTO`` serialized by the Delta log, so the temp-and-swap
-    disappears and a concurrent writer cannot race the rename window.
-    Same clause family, same duplicate-key guard, same idempotent
-    replay; batch 0 creates an EMPTY Delta table first so the merge
-    path (and its guard) is identical from the first batch. Raises
-    ``NotImplementedError`` per batch when delta-spark is absent
-    (loud, never a silent parquet fallback).
     """
     from pyspark.sql import functions as F
 
     from dataflow_python_etl_spark.operators.upsert import (
         _guard_missing_table,
         merge_df,
-        merge_table_transactional,
         write_and_swap,
     )
 
-    if engine not in ("parquet", "delta"):
-        raise ValueError(f"engine must be parquet|delta, got {engine!r}")
-    if engine == "delta":
-        try:
-            import delta  # noqa: F401
-        except ImportError as e:
-            raise NotImplementedError(
-                "stream_cdc_to_table(engine='delta') requires the delta-spark "
-                "package; use the default parquet engine instead"
-            ) from e
+    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
+        import os
 
-    def _clauses(data_cols):
-        return dict(
+        spark = batch_df.sparkSession
+        data_cols = [c for c in batch_df.columns if c != op_col]
+        _guard_missing_table(table_path, batch_id, "stream_cdc_to_table")
+        if os.path.exists(table_path):
+            existing = spark.read.parquet(table_path)
+        else:
+            existing = batch_df.select(*data_cols).where(F.lit(False))
+        merged = merge_df(
+            existing,
+            batch_df,
+            key_cols,
             when_matched_update={
                 c: F.col(f"s.{c}") for c in data_cols if c not in key_cols
             },
@@ -240,39 +229,6 @@ def stream_cdc_to_table(
             when_not_matched_insert={c: F.col(f"s.{c}") for c in data_cols},
             when_not_matched_insert_condition=F.col(f"s.{op_col}") != "D",
         )
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        import os
-
-        spark = batch_df.sparkSession
-        data_cols = [c for c in batch_df.columns if c != op_col]
-        if engine == "delta":
-            # the Delta log is the missing-table authority (no .__bak_
-            # convention to recover from) — but a vanished table past
-            # batch 0 must still refuse to rebuild from one batch
-            if not os.path.exists(table_path):
-                if batch_id > 0:
-                    raise RuntimeError(
-                        f"streaming sink restart at batch {batch_id} but Delta "
-                        f"table {table_path} is missing — refusing to rebuild "
-                        "from a single batch."
-                    )
-                (
-                    batch_df.select(*data_cols)
-                    .where(F.lit(False))
-                    .write.format("delta")
-                    .save(table_path)
-                )
-            merge_table_transactional(
-                spark, table_path, batch_df, key_cols, **_clauses(data_cols)
-            )
-            return
-        _guard_missing_table(table_path, batch_id, "stream_cdc_to_table")
-        if os.path.exists(table_path):
-            existing = spark.read.parquet(table_path)
-        else:
-            existing = batch_df.select(*data_cols).where(F.lit(False))
-        merged = merge_df(existing, batch_df, key_cols, **_clauses(data_cols))
         write_and_swap(merged, table_path)
 
     return (

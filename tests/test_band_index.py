@@ -421,7 +421,8 @@ def test_verify_pairs_matches_posting_verification(spark):
 def test_unpersist_all_releases_probe_cuts(spark):
     """The probe's lineage cuts (band rows, candidates, candidate
     shingle sets) are registered: ``unpersist_all`` frees their RDDs,
-    and a released frame fails loudly instead of recomputing."""
+    quietly (no per-cut WARN), and a released frame fails loudly
+    instead of recomputing."""
     jsc = spark.sparkContext._jsc
     unpersist_all()
     before = jsc.getPersistentRDDs().size()
@@ -430,7 +431,23 @@ def test_unpersist_all_releases_probe_cuts(spark):
     pairs = minhash_lsh_pairs_incremental(corpus, new, None, "doc_id", "text")
     assert _pair_rows(pairs) == {(1, 10, 1.0)}
     assert jsc.getPersistentRDDs().size() == before + 3
-    assert unpersist_all() == 3
+    # the JVM logs to the stderr it was launched with, which pytest's
+    # capfd cannot see: read its log through a log4j appender instead
+    ctx = spark._jvm.org.apache.logging.log4j.LogManager.getContext(False)
+    log = spark._jvm.java.io.StringWriter()
+    appender = spark._jvm.org.apache.logging.log4j.core.appender.WriterAppender.createAppender(
+        None, None, log, "release_probe", False, True
+    )
+    appender.start()
+    root = ctx.getConfiguration().getRootLogger()
+    root.addAppender(appender, None, None)
+    ctx.updateLoggers()
+    try:
+        assert unpersist_all() == 3
+    finally:
+        root.removeAppender("release_probe")
+        ctx.updateLoggers()
+    assert "lineage has been truncated" not in log.toString()
     assert jsc.getPersistentRDDs().size() == before
     # a new query over the released frame (a re-collect of the same
     # one would reuse its executed stages)

@@ -86,6 +86,26 @@ def test_compact_subcommand(spark, tmp_path, capsys):
     assert spark.read.parquet(f"{wh}/frag").count() == 1000
     assert "-> 1 files" in capsys.readouterr().out
 
+    # a hive-partitioned sink table with its replay ledger: compaction
+    # keeps the literal partition dirs (no int re-inference of 007) and
+    # carries the ledger through the swap
+    import os
+
+    part = f"{wh}/parted"
+    for day in ("007", "012"):
+        spark.range(100).repartition(8).write.parquet(f"{part}/day={day}")
+    with open(f"{part}/_applied_batch.json", "w") as f:
+        f.write('{"batch_id": 3}')
+    cli.main(["compact", "--warehouse", wh, "--table", "parted"])
+    assert sorted(d for d in os.listdir(part) if not d.startswith(("_", "."))) == [
+        "day=007", "day=012"
+    ]
+    with open(f"{part}/_applied_batch.json") as f:
+        assert f.read() == '{"batch_id": 3}'
+    assert [len(glob.glob(f"{part}/day={d}/*.parquet")) for d in ("007", "012")] == [1, 1]
+    assert spark.read.parquet(part).count() == 200
+    assert "parted: 16 files" in capsys.readouterr().out
+
 
 def test_profile_subcommand(spark, tmp_path, capsys):
     wh = str(tmp_path / "lake_prof")

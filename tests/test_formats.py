@@ -1,4 +1,5 @@
-"""JSONL/ORC format adapters and the leakage-proof group split."""
+"""JSON lines/ORC through ``write_and_swap(fmt=)`` and ``spark.read``,
+and the leakage-proof group split."""
 
 import os
 
@@ -6,14 +7,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from dataflow_python_etl_spark.operators.corpus import split_by_group
+from dataflow_python_etl_spark.operators.upsert import write_and_swap
 from dataflow_python_etl_spark.sources.catalog import read_table
-from dataflow_python_etl_spark.sources.formats import (
-    read_avro,
-    read_jsonl,
-    read_orc,
-    write_jsonl,
-    write_orc,
-)
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -21,8 +16,8 @@ SF_DIR = "/root/testdata/sf0.001"
 def test_jsonl_round_trip_with_schema(spark, tmp_path):
     path = str(tmp_path / "nation_jsonl")
     nation = read_table(spark, SF_DIR, "nation")
-    write_jsonl(nation, path)
-    got = read_jsonl(spark, path, nation.schema)
+    write_and_swap(nation, path, fmt="json")
+    got = spark.read.schema(nation.schema).json(path)
     assert got.schema == nation.schema
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, nation.collect()))
 
@@ -32,26 +27,21 @@ def test_jsonl_nested_columns(spark, tmp_path):
     df = spark.createDataFrame(
         [(1, {"a": 2}, [1, 2, 3])], "id: long, m: map<string,long>, xs: array<long>"
     )
-    write_jsonl(df, path)
-    got = read_jsonl(spark, path, df.schema).collect()[0]
+    write_and_swap(df, path, fmt="json")
+    got = spark.read.schema(df.schema).json(path).collect()[0]
     assert got["m"] == {"a": 2} and got["xs"] == [1, 2, 3]
 
 
 def test_orc_round_trip_and_swap(spark, tmp_path):
     path = str(tmp_path / "orders_orc")
     orders = read_table(spark, SF_DIR, "orders").limit(500)
-    write_orc(orders, path)
-    n1 = read_orc(spark, path).count()
+    write_and_swap(orders, path, fmt="orc")
+    n1 = spark.read.orc(path).count()
     # overwrite an existing table: swap, no leftovers
-    write_orc(orders.limit(100), path)
-    assert read_orc(spark, path).count() == 100 and n1 == 500
+    write_and_swap(orders.limit(100), path, fmt="orc")
+    assert spark.read.orc(path).count() == 100 and n1 == 500
     leftovers = [p for p in os.listdir(tmp_path) if ".__" in p]
     assert leftovers == []
-
-
-def test_avro_is_gated_not_stubbed(spark, tmp_path):
-    with pytest.raises(NotImplementedError, match="spark-avro"):
-        read_avro(spark, str(tmp_path / "x"))
 
 
 def test_split_by_group_cohesion_and_proportions(spark):

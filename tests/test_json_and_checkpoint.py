@@ -1,12 +1,12 @@
-"""JSONL source (permissive, corrupt-record capture) and checkpointed
+"""JSON lines read PERMISSIVE (corrupt-record capture) and checkpointed
 streaming file sink (stop → append input → resume, no loss/dup)."""
 
 import shutil
 
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from dataflow_python_etl_spark.sources.catalog import read_table
-from dataflow_python_etl_spark.sources.json_ingest import read_typed_jsonl
 from dataflow_python_etl_spark.streaming.pipeline import EVENTS_SCHEMA, read_event_stream
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -20,7 +20,15 @@ def test_jsonl_roundtrip_and_corrupt_capture(spark, tmp_path):
         "THIS IS NOT JSON",
     ]
     p.write_text("\n".join(lines) + "\n")
-    df = read_typed_jsonl(spark, str(p), EVENTS_SCHEMA, keep_corrupt=True)
+    schema = T.StructType(
+        EVENTS_SCHEMA.fields + [T.StructField("_corrupt_record", T.StringType())]
+    )
+    df = (
+        spark.read.schema(schema)
+        .option("mode", "PERMISSIVE")
+        .option("columnNameOfCorruptRecord", "_corrupt_record")
+        .json(str(p))
+    )
     rows = df.collect()
     assert len(rows) == 3
     good = [r for r in rows if r["_corrupt_record"] is None]

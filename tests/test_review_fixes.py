@@ -7,7 +7,6 @@ from dataflow_python_etl_spark.operators.dedup import (
     ngram_jaccard_pairs,
     unpersist_all,
 )
-from dataflow_python_etl_spark.operators.skew import salted_count, with_salt
 from dataflow_python_etl_spark.operators.upsert import swap_table_dir
 
 
@@ -23,17 +22,6 @@ def test_capped_jaccard_uses_filtered_sizes(spark):
     pairs = ngram_jaccard_pairs(df, threshold=0.9, max_shingle_df=5)
     got = {(r["doc_a"], r["doc_b"]): r["jaccard"] for r in pairs.collect()}
     assert got.get((100, 101)) == 1.0
-
-
-def test_salt_spreads_identical_rows(spark):
-    # 1000 byte-identical rows of one hot key must not share one salt.
-    df = spark.createDataFrame([("hot",)] * 1000, "k: string")
-    n_salts = df.select(F.countDistinct("__salt")).collect()[0][0] if False else (
-        with_salt(df, 16).select(F.countDistinct("__salt")).first()[0]
-    )
-    assert n_salts > 8
-    counts = {r["k"]: r["count"] for r in salted_count(df, ["k"]).collect()}
-    assert counts == {"hot": 1000}
 
 
 def test_swap_failure_restores_table(spark, tmp_path):

@@ -469,58 +469,6 @@ def test_stream_dedup_ingest_refuses_missing_corpus_on_restart(spark, tmp_path):
         q.stop()
 
 
-def test_stream_cdc_delta_engine_gated_loudly(spark, tmp_path):
-    """engine='delta' without delta-spark must fail LOUDLY at call
-    time (never a silent parquet fallback); with the package, the sink
-    must match the parquet engine's result exactly (contract test,
-    skipped in this sandbox)."""
-    from dataflow_python_etl_spark.streaming.pipeline import stream_cdc_to_table
-
-    schema = _cdc_schema()
-    src = str(tmp_path / "de_in")
-    spark.createDataFrame([(1, "a", "I")], schema).coalesce(1).write.parquet(src)
-    stream = spark.readStream.schema(schema).parquet(src)
-    try:
-        import delta  # noqa: F401
-    except ImportError:
-        with pytest.raises(NotImplementedError, match="delta-spark"):
-            stream_cdc_to_table(
-                stream, str(tmp_path / "de_t"), ["id"], str(tmp_path / "de_ck"),
-                engine="delta",
-            )
-        return
-    # contract path (delta-spark installed): same rows as the parquet twin
-    q = stream_cdc_to_table(
-        stream, str(tmp_path / "de_t"), ["id"], str(tmp_path / "de_ck"), engine="delta"
-    )
-    q.processAllAvailable(); q.stop()
-    spark.createDataFrame([(1, "a2", "U"), (2, "b", "I")], schema).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    q = stream_cdc_to_table(
-        stream, str(tmp_path / "de_t"), ["id"], str(tmp_path / "de_ck"), engine="delta"
-    )
-    q.processAllAvailable(); q.stop()
-    got = {
-        (r["id"], r["val"])
-        for r in spark.read.format("delta").load(str(tmp_path / "de_t")).collect()
-    }
-    assert got == {(1, "a2"), (2, "b")}
-
-
-def test_stream_cdc_engine_validation(spark, tmp_path):
-    from dataflow_python_etl_spark.streaming.pipeline import stream_cdc_to_table
-
-    schema = _cdc_schema()
-    src = str(tmp_path / "ev_in")
-    spark.createDataFrame([(1, "a", "I")], schema).coalesce(1).write.parquet(src)
-    with pytest.raises(ValueError, match="parquet|delta"):
-        stream_cdc_to_table(
-            spark.readStream.schema(schema).parquet(src),
-            str(tmp_path / "t"), ["id"], str(tmp_path / "ck"), engine="iceberg",
-        )
-
-
 def test_streaming_count_min_parity(spark, event_drop):
     """The streaming sketch after draining all drops is cell-for-cell
     the batch sketch over the same events — mergeability is the

@@ -285,68 +285,6 @@ def test_merge_df_null_condition_keeps_row(spark):
     assert {r["id"]: r["v"] for r in out} == {1: 10.0}
 
 
-def test_merge_table_transactional_without_delta(spark, tmp_path):
-    """Sandbox path: no delta-spark -> loud NotImplementedError, not a
-    silent parquet fallback (callers choose the fallback themselves)."""
-    import pytest
-
-    from dataflow_python_etl_spark.operators.upsert import merge_table_transactional
-
-    try:
-        import delta  # noqa: F401
-
-        pytest.skip("delta-spark installed; covered by the contract test")
-    except ImportError:
-        pass
-    path = str(tmp_path / "t")
-    _base(spark).write.parquet(path)
-    src = spark.createDataFrame([(1, "a9", 99.0)], "id: long, name: string, v: double")
-    with pytest.raises(NotImplementedError, match="delta-spark"):
-        merge_table_transactional(
-            spark, path, src, ["id"], when_matched_update={"v": F.col("s.v")}
-        )
-
-
-def test_merge_table_transactional_contract(spark, tmp_path):
-    """With delta-spark installed, the transactional MERGE must produce
-    exactly merge_df's result for the full clause family (delete wins
-    over update, conditional insert, untouched target-only rows)."""
-    import pytest
-
-    pytest.importorskip("delta")
-    from dataflow_python_etl_spark.operators.upsert import (
-        merge_df,
-        merge_table_transactional,
-    )
-
-    path = str(tmp_path / "delta_t")
-    _base(spark).write.format("delta").save(path)
-    source = spark.createDataFrame(
-        [(2, "b2", 22.0), (3, "c", -1.0), (4, "d", 40.0), (5, "e", -5.0)],
-        "id: long, name: string, v: double",
-    )
-    clauses = dict(
-        when_matched_update={"name": F.col("s.name"), "v": F.col("s.v")},
-        when_matched_delete_condition=F.col("s.v") < 0,
-        when_not_matched_insert={
-            "id": F.col("s.id"),
-            "name": F.col("s.name"),
-            "v": F.col("s.v"),
-        },
-        when_not_matched_insert_condition=F.col("s.v") >= 0,
-    )
-    expected = sorted(
-        map(tuple, merge_df(_base(spark), source, ["id"], **clauses).collect())
-    )
-    got = sorted(
-        map(
-            tuple,
-            merge_table_transactional(spark, path, source, ["id"], **clauses).collect(),
-        )
-    )
-    assert got == expected
-
-
 def test_forget_keys_erasure_audit_idempotent(spark, tmp_path):
     from pyspark.sql import functions as F
 
